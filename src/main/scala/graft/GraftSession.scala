@@ -29,6 +29,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   * local core count — at cluster scale set `partitions` to ~2-3× total
   * executor cores (or rely on AQE coalescing, which is enabled). */
 object GraftSession {
+  /** Local core count for harness sessions: `SPARK_GRAFT_CPUS` when set,
+    * else the machine's available processors. */
+  def localCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
   def builder(master: String, partitions: Int): SparkSession.Builder = {
     val b = SparkSession.builder()
       .master(master)

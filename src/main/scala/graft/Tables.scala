@@ -47,10 +47,15 @@ object Tables {
       df.createOrReplaceTempView(name)
     }
 
-  /** Session configs every graft entry point needs. */
+  /** Session configs every graft entry point needs. The two `spark.hadoop`
+    * entries send `file://` through [[graft.sources.NioLocalFileSystem]] on
+    * both Hadoop APIs: FileSystem (parquet sinks, committers) and
+    * FileContext (streaming offsets and commits, RocksDB state uploads). */
   val sessionConfigs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.sql.session.timeZone" -> "UTC")
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.hadoop.fs.file.impl" -> classOf[graft.sources.NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.sources.NioLocalFs].getName)
   def documents(s: SparkSession, d: String): DataFrame  = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }

@@ -5,8 +5,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+  GroupStateTimeout, OutputMode, StatefulProcessor, StatefulProcessorHandle,
+  TTLConfig, TimeMode, TimerValues, ValueState}
 import graft.functions.Exact._
 import graft.ztbus.Telemetry
 
@@ -83,6 +83,17 @@ object Streaming {
     * sample's time/speed/accel, enough to continue the first/second
     * difference across micro-batches. */
   final case class DiffState(lastMs: Long, lastSpeed: Double, lastAccel: Double)
+
+  /** Keep one close timer per trip, `SessionCloseMs` past its last sample:
+    * when the state's `lastMs` moves (or the state is cleared), the timer
+    * for the previous bound is deleted before the new one is registered, so
+    * superseded timers do not pile up in the state store. */
+  private def moveTimer(handle: StatefulProcessorHandle, prevLastMs: Option[Long],
+      lastMs: Option[Long]): Unit =
+    if (prevLastMs != lastMs) {
+      prevLastMs.foreach(ms => handle.deleteTimer(ms + SessionCloseMs))
+      lastMs.foreach(ms => handle.registerTimer(ms + SessionCloseMs))
+    }
 
   /** One telemetry sample augmented with accel/jerk — the streaming
     * equivalent of the batch per-trip window diffs
@@ -189,7 +200,8 @@ object Streaming {
       // (time, id) — the batch window's exact sort, so duplicate
       // timestamps tiebreak identically
       val sorted = it.toIndexedSeq.sortBy(t => (t.time.getTime, t.id))
-      var last: Option[DiffState] = if (state.exists()) Some(state.get()) else None
+      val prev: Option[DiffState] = if (state.exists()) Some(state.get()) else None
+      var last = prev
       val out = sorted.map { t =>
         val ms = t.time.getTime
         val (accel, jerk) =
@@ -208,7 +220,7 @@ object Streaming {
       }
       last.foreach { s =>
         state.update(s)
-        getHandle.registerTimer(s.lastMs + SessionCloseMs)
+        moveTimer(getHandle, prev.map(_.lastMs), Some(s.lastMs))
       }
       out.iterator
     }
@@ -1758,8 +1770,9 @@ object Streaming {
         timers: TimerValues): Iterator[SessionStat] = {
       val sorted = it.toIndexedSeq.sortBy(t => (t.time.getTime, t.id))
       val out = Seq.newBuilder[SessionStat]
-      var open: Option[SessionStatsState] =
+      val prev: Option[SessionStatsState] =
         if (state.exists()) Some(state.get()) else None
+      var open = prev
       sorted.foreach { t =>
         val ms = t.time.getTime
         (open, flagOf(t)) match {
@@ -1782,11 +1795,10 @@ object Streaming {
         }
       }
       open match {
-        case Some(s) =>
-          state.update(s)
-          getHandle.registerTimer(s.lastMs + SessionCloseMs)
+        case Some(s) => state.update(s)
         case None => state.clear()
       }
+      moveTimer(getHandle, prev.map(_.lastMs), open.map(_.lastMs))
       out.result().iterator
     }
 

@@ -18,7 +18,8 @@ object QPlan {
     require(args.nonEmpty, "usage: QPlan <queryName>...")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val wantPlan = sys.env.get("SPARK_GRAFT_PLAN").contains("1")
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
+    val cpus = GraftSession.localCores
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     final case class St(var tasks: Int = 0, var runMs: Long = 0L,

@@ -7,13 +7,14 @@ import graft.GraftSession
   * /proc/loadavg — the evidence shape every bench-drift attribution this
   * project has made (q48 r8, q70/q71 r10, q107 r11) has needed. Usage:
   * `sbt "runMain graft.tools.QSolo q83_containment_coordinated q95_pq_topk_learned"`
-  * (env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_REPS). */
+  * (env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_REPS, SPARK_GRAFT_CPUS). */
 object QSolo {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: QSolo <queryName>...")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
+    val cpus = GraftSession.localCores
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def loadavg: String =
       scala.io.Source.fromFile("/proc/loadavg").getLines().next()

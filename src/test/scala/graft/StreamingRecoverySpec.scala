@@ -373,4 +373,39 @@ class StreamingRecoverySpec extends SparkSpec {
         s"(${streamed.size} vs ${batch.size})")
     lr.unpersist(blocking = false); docs.unpersist(blocking = false)
   }
+
+  test("stateful ZTBus stages keep one close timer per trip, across a restart") {
+    implicit val s = spark
+    val base = "2021-03-09 14:15:00"
+    val in = MemoryStream[graft.ztbus.Telemetry]
+    val faces = Seq(
+      "diff" -> (() => Streaming.fullMetricsStream(in.toDS())),
+      "sessionStats" -> (() => Streaming.sessionStatsStream(in.toDS(),
+        "status_halt_brake_is_active").toDF()))
+    val ckpts = faces.map(_ => Files.createTempDirectory("graft-timer-ckpt").toString)
+    def start() = faces.zip(ckpts).map { case ((_, df), ckpt) =>
+      df().writeStream.outputMode("append").format("noop")
+        .option("checkpointLocation", ckpt).start()
+    }
+    // one trip, three batches of 10 s each with the halt brake held: every
+    // batch moves the trip's last sample, so each moves its close timer
+    val batches = (0 until 30).map(i =>
+      tel(i.toLong, 1L, sec(base, i), speed = 1.0)
+        .copy(status_halt_brake_is_active = true)).grouped(10).toSeq
+    def feed(qs: Seq[org.apache.spark.sql.streaming.StreamingQuery],
+        bs: Seq[Seq[graft.ztbus.Telemetry]]) = {
+      bs.foreach { b => in.addData(b); qs.foreach(_.processAllAvailable()) }
+      val progress = qs.map(_.recentProgress.toSeq)
+      qs.foreach(_.stop())
+      progress
+    }
+    val runs = feed(start(), batches.take(1)).zip(feed(start(), batches.drop(1)))
+    faces.map(_._1).zip(runs).foreach { case (face, (p1, p2)) =>
+      def sum(k: String) = (p1 ++ p2).flatMap(_.stateOperators)
+        .map(o => Option(o.customMetrics.get(k)).map(_.longValue).getOrElse(0L)).sum
+      assert((sum("numRegisteredTimers"), sum("numDeletedTimers"),
+        sum("numExpiredTimers")) == ((3L, 2L, 0L)),
+        s"$face: every move must delete the superseded timer")
+    }
+  }
 }
