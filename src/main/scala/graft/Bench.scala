@@ -21,7 +21,8 @@ import org.apache.spark.sql.SparkSession
   * artifact carries only wall times. BENCH_DETAIL.json therefore now
   * records, per query, the raw per-rep wall times AND the JVM GC time
   * inside each rep (sum over GarbageCollectorMXBeans), plus an `env` block
-  * (heap size, cores, /proc/loadavg at start/end, total GC time). A slow
+  * (heap size, the session's `defaultParallelism` as `cores`,
+  * /proc/loadavg at start/end, total GC time). A slow
   * round is then readable from the artifact itself: wall moved WITH gc →
   * heap/GC state; wall moved, gc flat → machine-level (co-tenant/CPU)
   * interference; either way the operator code is exonerated or indicted
@@ -329,7 +330,7 @@ object Bench {
       val rt = Runtime.getRuntime
       val env =
         s"""{"xmx_gb":${f"${rt.maxMemory / (1 << 30).toDouble}%.1f"},""" +
-          s""""cores":${rt.availableProcessors},""" +
+          s""""cores":${spark.sparkContext.defaultParallelism},""" +
           s""""loadavg_start":"$loadAtStart","loadavg_end":"$loadAvg",""" +
           s""""gc_total_sec":${f"${gcMillis / 1e3}%.1f"}}"""
       java.nio.file.Files.write(

@@ -4,9 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Writes PLANS.md: the formatted physical plans of the flagship queries —
-  * standing evidence of pushdown, pruning, broadcast, and native-expression
-  * placement that a reviewer can read without running anything.
+/** Writes plans/PLANS.md: the formatted physical plans of the flagship
+  * queries — standing evidence of pushdown, pruning, broadcast, and
+  * native-expression placement, readable without running anything.
   * Regenerate with `sbt "runMain graft.PlanDump"`. */
 object PlanDump {
   private val Flagship = Seq(
@@ -102,8 +102,9 @@ object PlanDump {
         sb.append(fmt(plan))
         sb.append("\n```\n")
     }
-    Files.writeString(Paths.get("PLANS.md"), sb.toString)
-    println(s"[plandump] wrote PLANS.md (${Flagship.size} plans + q117 stages)")
+    val out = Paths.get("plans", "PLANS.md")
+    Files.writeString(out, sb.toString)
+    println(s"[plandump] wrote $out (${Flagship.size} plans + q117 stages)")
     spark.stop()
   }
 }

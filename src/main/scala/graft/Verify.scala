@@ -12,8 +12,8 @@ object Verify {
     // the SAME sf dir the queries ran on — published for the thunks
     System.setProperty("graft.verify.sfdir", sfDir)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val cpus = GraftSession.localCores
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

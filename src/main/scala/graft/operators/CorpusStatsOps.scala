@@ -211,12 +211,11 @@ object CorpusStatsOps {
     // Row-local since r19 session 3: per-doc entropy is a function of
     // ONE row, so the whole screen is a stateless select on
     // [[entropyExpr]] (sort-runs-fold inside the row, exact DECIMAL
-    // fold) — the formulation the ingest face
-    // ([[graft.streaming.Streaming.entropyScreenStream]]) has always
-    // used, with StreamingSpec pinning its row-for-row parity against
-    // the old explode + per-doc-window + dual-aggregate batch shape.
-    // That shape shuffled the corpus' ENTIRE token and bigram streams
-    // through two (did, token) aggregations plus a per-did window and
+    // fold), so this operator runs on a streaming frame as-is
+    // (StreamParitySpec pins stream against batch). The old explode +
+    // per-doc-window + dual-aggregate batch shape shuffled the corpus'
+    // ENTIRE token and bigram streams through two (did, token)
+    // aggregations plus a per-did window and
     // re-joined the results (6 exchanges; a serial AQE-coalesced stage
     // chain at bench scale) to compute values every row already had
     // locally. Addends and arithmetic are identical: decimal sums are

@@ -39,7 +39,7 @@ object PQOps {
     * index. The DEFAULT batch path is ROW-LOCAL: the codebook is `k`
     * small rows by contract, so it is collected once at plan-build time
     * and the whole encode becomes one stateless expression tree
-    * ([[pqEncodeExprs]], the same expressions the streaming face runs)
+    * ([[pqEncodeExprs]]; the operator runs on a streaming frame as-is)
     * mapped over the corpus — O(corpus) work, ZERO shuffle, no row
     * expansion. The relational window-argmin form this replaced survives
     * as [[pqIndexRelational]] (the oracle-expressible shape); PQSpec

@@ -1245,8 +1245,8 @@ object TextOps {
       temperatureRates(docs, source, alpha))
 
   /** The per-source rate table behind [[temperatureMix]] — (source, n_src,
-    * p_raw, p_temp, boost) — exposed as the STATIC side of the streaming
-    * ingest face ([[graft.streaming.Streaming.temperatureMixStream]]):
+    * p_raw, p_temp, boost) — exposed as the STATIC side of a stream:
+    * [[applyTemperatureRates]] runs on a streaming frame as-is, and
     * source counts are corpus-global, so a stream applies pre-computed
     * rates rather than re-deriving them per micro-batch (the
     * [[mixThresholds]] convention; rebuild on re-mix). Tiny at any scale
@@ -1273,8 +1273,8 @@ object TextOps {
   }
 
   /** Per-doc copy realization against a precomputed rate table — the
-    * row-local half of [[temperatureMix]], shared verbatim by the batch
-    * and streaming faces so the draw arithmetic cannot drift. Expects
+    * row-local half of [[temperatureMix]]; it runs on a streaming frame
+    * as-is, so batch and stream share the draw arithmetic. Expects
     * `base` with (doc_id, text, source). */
   private[graft] def applyTemperatureRates(base: DataFrame,
       rates: DataFrame): DataFrame = {
@@ -2293,7 +2293,8 @@ object TextOps {
     * one row per covered quantized bucket `_b` (±1 slop; the exact
     * comparison in the probe decides membership, so slop costs
     * candidates, never correctness). Vocabulary-scale — the static side
-    * of the streaming face, broadcastable at any corpus size. */
+    * when [[noiseDraws]] runs on a stream, broadcastable at any corpus
+    * size. */
   def noiseTable(vocab: DataFrame, alpha: Double = 0.75,
       buckets: Int = 1024): DataFrame = {
     require(buckets > 1, s"need buckets > 1, got $buckets")

@@ -386,7 +386,7 @@ object UrlOps {
   /** Per-document URL canonicalization frame: the raw and canonical
     * URL, host, registered domain, and how many query parameters the
     * tracking strip removed. Pure row-local select; `keep` names
-    * pass-through columns (the streaming face keeps its event time).
+    * pass-through columns (a stream keeps its event time).
     *
     * Production path is the ONE-SCAN struct kernel
     * ([[graft.functions.UrlCanonParts]], r16 verdict item 5): the

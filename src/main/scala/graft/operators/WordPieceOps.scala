@@ -340,7 +340,7 @@ object WordPieceOps {
   }
 
   /** [[wordPieceTokenize]] over an already-collected piece list (the
-    * frozen-vocabulary form the memoized registry/stream faces hold). */
+    * frozen-vocabulary form the memoized registry and streams hold). */
   def wordPieceTokenizePieces(docs: DataFrame, id: Column, text: Column,
       vocab: Seq[String]): DataFrame = {
     val toks = graft.functions.WordPieceExpressions

@@ -21,6 +21,14 @@ import graft.ztbus.Telemetry
   * of 400 s is the streaming analog of the reference's bounded lookback
   * (20 iterations × 20 s, processor/main.py:246-247): later-arriving samples
   * are dropped, matching the reference's hard cap.
+  *
+  * A face exists here only when its plan differs from the batch
+  * operator's: state, a watermark or window, a stream-static join against
+  * a frozen model the batch operator would fit itself, or a
+  * `foreachBatch` sink. Row-local batch operators in `graft.operators`
+  * (tokenizers, screens, redaction, encoders) run on a streaming frame
+  * as-is; apply them directly. `StreamParitySpec` pins each one's stream
+  * run against its batch run.
   */
 object Streaming {
 
@@ -400,61 +408,6 @@ object Streaming {
         col("_v.src_id").as("src_id"))
   }
 
-  /** Ingest face of [[graft.operators.BpeOps.bpeTokenize]] — arriving
-    * docs tokenized against the FROZEN merge table (tokenizers are
-    * fitted corpus-wide once and then applied forever; a micro-batch
-    * never re-fits). The ordered merge list is baked into one row-local
-    * compiled expression at stream definition ([[graft.operators.BpeOps
-    * .bpeTokensCompiled]] — the same expression the batch face builds, so
-    * parity is definitional, and the plan stays three nodes at any
-    * vocabulary size), no state, no join. Re-fit the tokenizer →
-    * restart the stream, the standing static-index rule. */
-  def bpeTokenizeStream(docs: DataFrame,
-      merges: Seq[(String, String)]): DataFrame = {
-    val toks = graft.operators.BpeOps.bpeTokensCompiled(
-      docs.sparkSession, col("text"), merges)
-    docs.select(col("doc_id"), toks.as("tokens"),
-      size(toks).cast("long").as("n_tokens"))
-  }
-
-  /** Ingest face of [[graft.operators.BpeOps.byteBpeTokenize]] — the
-    * [[bpeTokenizeStream]] contract for the BYTE-level (GPT-family)
-    * tokenizer: arriving docs encoded under the FROZEN byte-merge
-    * table, baked as data into the same row-local compiled expression
-    * the batch face builds ([[graft.functions.BpeEncode]] with
-    * `byteLevel=true`, parity definitional), no state, no join. The
-    * 256-octet base alphabet means no arrival can ever fail or UNK —
-    * the face's defining property. Re-fit → restart, the standing
-    * static-index rule. */
-  def byteBpeTokenizeStream(docs: DataFrame,
-      merges: Seq[(String, String)]): DataFrame = {
-    graft.functions.BpeExpressions.register(docs.sparkSession)
-    val toks = graft.functions.BpeExpressions.byteBpeEncode(
-      col("text"), merges)
-    docs.select(col("doc_id"), toks.as("tokens"),
-      size(toks).cast("long").as("n_tokens"))
-  }
-
-  /** Ingest face of [[graft.operators.BpeOps.gptByteBpeTokenize]] —
-    * the [[byteBpeTokenizeStream]] contract on the GPT pre-tokenized
-    * segmentation: ONE fused scan per arrival (the r18
-    * [[graft.functions.GptByteBpe]] kernel the batch path runs — zero
-    * regex, zero HOF, no pre-token array), all row-local (no state, no
-    * join); concat(unhex) of an arrival's tokens rebuilds its FULL
-    * text. Optional ATOMIC `specials` ride the same kernel (the
-    * tiktoken contract — batch twin `gptByteBpeTokenizeSpecial`,
-    * parity pinned). Re-fit → restart. */
-  def gptByteBpeTokenizeStream(docs: DataFrame,
-      merges: Seq[(String, String)],
-      specials: Seq[String] = Nil): DataFrame = {
-    require(specials.forall(_.nonEmpty), "specials must be non-empty")
-    graft.functions.BpeExpressions.register(docs.sparkSession)
-    val toks = graft.functions.BpeExpressions.gptByteBpe(col("text"),
-      merges, specials)
-    docs.select(col("doc_id"), toks.as("tokens"),
-      size(toks).cast("long").as("n_tokens"))
-  }
-
   /** Typo-normalization ingest face of
     * [[graft.operators.TextOps.fuzzyVocabPairs]]: arriving documents'
     * out-of-vocabulary words are resolved against the FROZEN reference
@@ -499,36 +452,6 @@ object Streaming {
         (-col("_b.ndf")).as("suggestion_df"))
   }
 
-  /** Ingest face of [[graft.operators.UnigramOps.unigramTokenize]] —
-    * the [[bpeTokenizeStream]] contract for the unigram-LM family:
-    * arriving docs Viterbi-segmented under the FROZEN fitted piece
-    * table, baked as data into one row-local compiled expression
-    * ([[graft.functions.UnigramEncode]] — the same expression the batch
-    * face builds, parity definitional), no state, no join. Novel
-    * characters price at the unk floor instead of failing, so the face
-    * never drops an arrival. Re-fit → restart, the standing
-    * static-index rule. */
-  def unigramTokenizeStream(docs: DataFrame,
-      pieces: Seq[(String, Double)]): DataFrame =
-    graft.operators.UnigramOps.unigramTokenize(
-      docs, col("doc_id"), col("text"), pieces)
-
-  /** Ingest face of
-    * [[graft.operators.WordPieceOps.wordPieceTokenizePieces]] — the
-    * [[bpeTokenizeStream]] contract for the WordPiece family: arriving
-    * docs greedy-longest-matched against the FROZEN vocabulary, baked as
-    * data into one row-local compiled expression
-    * ([[graft.functions.WordPieceEncode]] — the same expression the
-    * batch face builds, parity definitional), no state, no join. A word
-    * the vocabulary cannot cover emits `[UNK]` instead of failing, so
-    * the face never drops an arrival; the per-window `n_unk` rate is
-    * the vocabulary-aging signal (rising UNKs → re-fit → restart, the
-    * standing static-index rule). */
-  def wordPieceTokenizeStream(docs: DataFrame,
-      vocab: Seq[String]): DataFrame =
-    graft.operators.WordPieceOps.wordPieceTokenizePieces(
-      docs, col("doc_id"), col("text"), vocab)
-
   /** Ingest face of the learned quality filter
     * ([[graft.operators.ClassifyOps.logisticScore]], q186): arriving
     * docs scored under the FROZEN round-6 IRLS weights — the whole face
@@ -547,80 +470,6 @@ object Streaming {
         ClassifyOps.QualityFeatCols, weights)
       .select(col("doc_id"), col("p_keep"), col("pred_keep"))
   }
-
-  /** Ingest face of [[graft.operators.TextOps.negativeSamples]]: draw
-    * `k` contrastive negatives for each ARRIVING document from the
-    * FROZEN training-corpus noise distribution
-    * ([[graft.operators.TextOps.noiseTable]] — the word2vec unigram^3/4
-    * convention). The right decomposition for a stream is exactly the
-    * batch operator's own split: the noise table is a pure function of
-    * the frozen vocabulary (fit-time, vocabulary-scale), and the draw
-    * half is row-local hashing + one equi-join probe — so the face IS
-    * [[graft.operators.TextOps.noiseDraws]] over the arrivals with the
-    * static side broadcast. Stateless stream-static inner join: no
-    * watermark, no state store, append-mode clean. A replay of any
-    * document yields bit-identical negatives to the batch operator
-    * (draws are content-hash positions — StreamingSpec pins the
-    * parity), which is what makes negatives reproducible across a
-    * resumed/restarted ingest. Re-fit vocabulary → restart, the
-    * standing static-index rule. */
-  def negativeSamplesStream(docs: DataFrame, noise: DataFrame, k: Int,
-      buckets: Int = 1024): DataFrame =
-    graft.operators.TextOps.noiseDraws(
-      docs.select(col("doc_id"), col("text").as("_text")),
-      broadcast(noise), k, buckets)
-
-  /** Ingest face of [[graft.operators.TextOps.gopherRepetition]] — the
-    * Gopher repetition rules ARE an ingest-time screen (every signal is
-    * document-local), so the stream body is literally the batch
-    * operator: one codegen'd kernel per arriving row, no state, no
-    * join, parity definitional. */
-  def gopherRepetitionStream(docs: DataFrame): DataFrame =
-    graft.operators.TextOps.gopherRepetition(docs, col("doc_id"), col("text"))
-
-  /** Ingest face of [[graft.operators.TextOps.gopherQuality]] — the
-    * non-repetition Gopher half, equally document-local: row-local HOF
-    * columns, no state, no join, parity definitional. */
-  def gopherQualityStream(docs: DataFrame): DataFrame =
-    graft.operators.TextOps.gopherQuality(docs, col("doc_id"), col("text"))
-
-  /** Ingest face of [[graft.operators.TextOps.normalizeText]] —
-    * normalization is the FIRST ingest stage (every downstream screen
-    * fingerprints the normal form); row-local string expressions, no
-    * state, parity definitional. */
-  def normalizeTextStream(docs: DataFrame,
-      keepText: Boolean = false): DataFrame =
-    graft.operators.TextOps.normalizeText(docs, col("doc_id"), col("text"),
-      keepText)
-
-  /** Ingest faces of [[graft.operators.TextOps.blocklistScreen]] /
-    * [[graft.operators.TextOps.blocklistRedact]] — the frozen phrase
-    * list is baked into the automaton at stream definition (the
-    * BpeEncode convention; list update ⇒ restart the stream, the
-    * standing static-index rule); one walk per arriving row, no state,
-    * parity definitional. */
-  def blocklistScreenStream(docs: DataFrame,
-      patterns: Seq[String]): DataFrame =
-    graft.operators.TextOps.blocklistScreen(docs, col("doc_id"),
-      col("text"), patterns)
-
-  def blocklistRedactStream(docs: DataFrame, patterns: Seq[String],
-      marker: String = "<BLOCKED>", keepText: Boolean = false): DataFrame =
-    graft.operators.TextOps.blocklistRedact(docs, col("doc_id"),
-      col("text"), patterns, marker, keepText)
-
-  /** Ingest face of [[graft.operators.WhitenOps.whiten]] — arriving
-    * vectors projected through the FROZEN fitted ZCA model (moments are
-    * corpus-wide statistics a micro-batch cannot know; re-fit ⇒ restart
-    * the stream, the standing static-index rule — with
-    * [[quantizationDriftStream]]'s drift-detector pattern as the re-fit
-    * trigger). The model is baked into one compiled row-local
-    * expression at stream definition, so the plan is three nodes and
-    * parity with the batch apply is definitional. */
-  def whitenStream(emb: DataFrame,
-      model: graft.operators.WhitenOps.ZcaModel): DataFrame =
-    graft.operators.WhitenOps.whiten(emb, col("vec_id"), col("embedding"),
-      model)
 
   /** Ingest face of [[graft.operators.AuditOps.applyChangeSet]] — a CDC
     * change stream continuously materialized into a keyed snapshot (the
@@ -823,66 +672,6 @@ object Streaming {
       .where(length(col("word")) > 0)
     graft.operators.RetrievalOps.dsirScore(
       words, ratioTable, Seq("window", "doc_id"))
-  }
-
-  /** Streaming face of [[graft.operators.TextOps.temperatureMix]] —
-    * ingest-time copy-count assignment against the corpus-global rate
-    * table ([[graft.operators.TextOps.temperatureRates]], the static
-    * side: source proportions are unknowable from a micro-batch). Each
-    * arriving doc gets its source's sampling weights and its
-    * deterministic `n_copies` via the SAME shared row-local draw as the
-    * batch face (one broadcast stream-static join, one row per doc, no
-    * state); a doc from a source absent in the rate table is dropped by
-    * the inner join — rebuild the rates on re-mix, as with every static
-    * index here. Batch replay parity is row-for-row by construction
-    * (both faces call the same `applyTemperatureRates`). */
-  def temperatureMixStream(docs: DataFrame, rates: DataFrame): DataFrame =
-    graft.operators.TextOps.applyTemperatureRates(
-      docs.select(col("doc_id"), col("text"), col("source")), rates)
-
-  /** Streaming face of [[graft.operators.SimilarityOps.sq8Quantize]] —
-    * ingest-time int8 encoding of arriving embeddings against the
-    * corpus-global quantizer ([[graft.operators.SimilarityOps.sq8Stats]],
-    * the static side: per-dimension min/max are a whole-corpus property a
-    * micro-batch cannot see). One broadcast stream-static join on a
-    * constant key (the stats frame is one row), then the same codegen'd
-    * [[graft.functions.SQ8Encode]] as the batch face — codes are
-    * identical to re-encoding the vector in batch by construction, so a
-    * quantized ANN index can be appended at ingest without re-reading
-    * float history. An out-of-range arriving component clamps to 0/255
-    * (the encoder's saturation rule); re-fit stats → re-encode, as with
-    * every static index here. Output matches [[
-    * graft.operators.SimilarityOps.sq8Quantize]]: (vec_id, codes, mins,
-    * scales). */
-  def sq8QuantizeStream(emb: DataFrame, stats: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(emb.sparkSession)
-    emb.select(col("vec_id"), col("embedding"), lit(1).as("_k"))
-      .join(broadcast(stats.withColumn("_k", lit(1))), "_k")
-      .select(col("vec_id"),
-        graft.functions.VectorExpressions.sq8Encode(
-          col("embedding"), col("mins"), col("scales")).as("codes"),
-        col("mins"), col("scales"))
-  }
-
-  /** Streaming face of [[graft.operators.PQOps.pqIndex]] — ingest-time
-    * product-quantization encode of arriving embeddings against the
-    * corpus-global codebook (the static side: codebooks are learned or
-    * sampled corpus-wide, a micro-batch cannot see them). The codebook is
-    * COLLECTED (k·dim floats — dimension-sized, the learnCentroids
-    * precedent) and the whole encode runs as one stateless row-local
-    * expression tree ([[graft.operators.PQOps.pqEncodeExprs]]): per
-    * subspace, `least` over per-entry (dist, id) structs, identical
-    * arithmetic and tie-break to the batch window argmin — so an
-    * arriving vector's codes equal a batch re-encode exactly and a PQ
-    * index can grow at ingest without re-reading float history. Output
-    * matches [[graft.operators.PQOps.pqIndex]]:
-    * (vec_id, codes, recon). Re-learn the codebook → re-encode, as with
-    * every static index here. */
-  def pqEncodeStream(emb: DataFrame, codebook: Seq[(Int, Array[Float])],
-      m: Int, sub: Int): DataFrame = {
-    val (codes, recon) = graft.operators.PQOps.pqEncodeExprs(
-      col("embedding"), codebook, m, sub)
-    emb.select(col("vec_id"), codes.as("codes"), recon.as("recon"))
   }
 
   /** Ingest face of [[graft.operators.PQOps.quantizationDrift]] — the
@@ -1093,67 +882,12 @@ object Streaming {
           .otherwise("test").as("split"))
   }
 
-  /** Streaming face of [[graft.operators.AuditOps.snapshotDeltaAudit]] —
-    * ingest-time change classification: every arriving keyed row is
-    * stamped added | changed | unchanged against the persisted
-    * [[graft.operators.AuditOps.snapshotHashIndex]] the moment it lands,
-    * instead of waiting for the next full two-sided
-    * [[graft.operators.AuditOps.snapshotDiff]]. The delta's hash is
-    * row-local and the classification is ONE stream-static left join on
-    * the key — no state, no watermark, append mode (the
-    * [[incrementalDedupStream]] shape); `removed` stays the full diff's
-    * job, a delta cannot witness absence.
-    *
-    * PERSIST the index before starting the stream (it is the static join
-    * side every micro-batch re-reads — the [[mediaNearDupScreenStream]]
-    * lesson); rebuild it at corpus re-index time like every ingest-time
-    * screen here. Batch parity is definitional: the body IS the batch
-    * operator applied to the streaming frame, so the face and
-    * [[graft.operators.AuditOps.snapshotDeltaAudit]] cannot drift
-    * (StreamingSpec pins it row-for-row anyway, plus checkpoint
-    * recovery). */
-  def snapshotDeltaAuditStream(delta: DataFrame, snapshotIndex: DataFrame,
-      key: Column, content: Seq[Column],
-      keyName: String = "key"): DataFrame =
-    graft.operators.AuditOps.snapshotDeltaAudit(
-      delta, snapshotIndex, key, content, keyName)
-
-  /** Streaming faces of the row-local curation transforms
-    * ([[graft.operators.TextOps.chunkDocs]] /
-    * [[graft.operators.TextOps.piiRedact]]): both are stateless
-    * projections, so the BATCH definition applies to a streaming
-    * `(doc_id, text)` frame unchanged — one Column definition shared by
-    * construction (the funnel's `funnelPredicates` discipline, taken to
-    * its limit: there is no second definition to drift). The delegates
-    * make the streaming surface explicit and give StreamingSpec a stable
-    * name to pin parity on. No state, no watermark; legal in append mode
-    * under any sink. */
-  def chunkDocsStream(docs: DataFrame, chunkWords: Int, stride: Int): DataFrame =
-    graft.operators.TextOps.chunkDocs(
-      docs, col("doc_id"), col("text"), chunkWords, stride)
-
-  def piiRedactStream(docs: DataFrame): DataFrame =
-    graft.operators.TextOps.piiRedact(docs, col("doc_id"), col("text"))
-
-  /** Streaming faces of the multimodal fingerprint ops
-    * ([[graft.operators.MultimodalOps.imageDHash]] /
-    * [[graft.operators.MultimodalOps.audioEnvHash]]): both are stateless
-    * per-row decodes, so the batch definition applies to a streaming
-    * media Dataset unchanged (the chunk/redact delegate discipline) —
-    * ingest-time fingerprinting; pair discovery against the corpus hash
-    * index stays a downstream stream-static join. */
-  def imageDHashStream(media: Dataset[graft.operators.MultimodalOps.MediaRow])(
-      implicit spark: SparkSession): Dataset[graft.operators.MultimodalOps.ImageHash] =
-    graft.operators.MultimodalOps.imageDHash(media)
-
-  def audioEnvHashStream(media: Dataset[graft.operators.MultimodalOps.MediaRow])(
-      implicit spark: SparkSession): Dataset[graft.operators.MultimodalOps.AudioHash] =
-    graft.operators.MultimodalOps.audioEnvHash(media)
-
   /** Ingest-time media near-dup SCREEN over a 64-bit fingerprint column —
     * the [[incrementalDedupStream]] shape extended to the image/audio
     * modality: each micro-batch of freshly-fingerprinted media
-    * ([[imageDHashStream]] / [[audioEnvHashStream]]) is screened against
+    * ([[graft.operators.MultimodalOps.imageDHash]] /
+    * [[graft.operators.MultimodalOps.audioEnvHash]] applied to the
+    * stream; `hashName` "dhash" / "ehash") is screened against
     * the EXISTING corpus's fingerprints, and survivors are the rows to
     * append. A delta row is dropped iff some corpus fingerprint is within
     * hamming `maxHamming` of it.
@@ -1215,16 +949,6 @@ object Streaming {
     }
     screened.unionByName(deltaHashes.where(!col("ok")))
   }
-
-  /** [[mediaNearDupScreenStream]] on [[imageDHashStream]] output. */
-  def imageNearDupScreenStream(deltaHashes: DataFrame, corpusHashes: DataFrame,
-      maxHamming: Int = 6): DataFrame =
-    mediaNearDupScreenStream(deltaHashes, corpusHashes, "dhash", maxHamming)
-
-  /** [[mediaNearDupScreenStream]] on [[audioEnvHashStream]] output. */
-  def audioNearDupScreenStream(deltaHashes: DataFrame, corpusHashes: DataFrame,
-      maxHamming: Int = 6): DataFrame =
-    mediaNearDupScreenStream(deltaHashes, corpusHashes, "ehash", maxHamming)
 
   /** Ingest-time VIDEO near-dup detection — the frame-fraction semantics of
     * [[graft.operators.MultimodalOps.videoNearDupPairs]] as a streaming
@@ -1988,46 +1712,6 @@ object Streaming {
       .where(col("n_shared") >= minShared)
   }
 
-  /** Ingest face of [[graft.operators.HtmlOps.extractText]] +
-    * [[graft.operators.HtmlOps.extractContent]] — raw crawled HTML in,
-    * clean content out. The whole chain (regex strip, entity decode,
-    * line split, density keep flags) is row-local column arithmetic —
-    * the keep flags use the HOF form precisely because a streaming plan
-    * cannot run the lag/lead window — so this face is a stateless
-    * select: no watermark, no state store, arbitrary throughput. */
-  /** Ingest face of [[graft.operators.CorpusStatsOps.entropyScreen]] —
-    * per-arrival unigram/bigram token entropy as a stateless select on
-    * the row-local [[graft.operators.CorpusStatsOps.entropyExpr]] HOF
-    * (sort-runs-fold inside the row, DECIMAL fold — the batch op's
-    * explode + per-doc window is unsupported in streaming plans, and
-    * the addends/arithmetic are identical, so parity is exact). */
-  def entropyScreenStream(docs: DataFrame,
-      timeCol: String = "event_time"): DataFrame = {
-    import graft.operators.CorpusStatsOps.entropyExpr
-    // same once-filtered token stream for both distributions (the
-    // batch op's rule — phantom bigrams around doubled spaces are a
-    // parity bug, not a feature); the filtered array is a PROJECTED
-    // column (the q139 rule — as a captured subexpression the gram
-    // transform re-ran split+filter per position, quadratic in
-    // document length), an extra stateless select that stays
-    // streaming-legal
-    val ws = col("_ew")
-    val grams = when(size(ws) >= 2,
-      transform(sequence(lit(1), size(ws) - 1),
-        i => concat_ws(" ", slice(ws, i, lit(2)))))
-      .otherwise(array().cast("array<string>"))
-    docs.select(col(timeCol), col("doc_id"),
-        filter(split(col("text"), " "), w => length(w) > 0).as("_ew"))
-      .select(col(timeCol), col("doc_id"),
-        size(ws).cast("long").as("n_tokens"),
-        size(array_distinct(ws)).cast("long").as("n_types"),
-        entropyExpr(ws).as("word_entropy"),
-        when(size(array_distinct(ws)) > 1, graft.functions.Exact.round6z(
-          entropyExpr(ws) / log(size(array_distinct(ws)).cast("double"))))
-          .as("norm_entropy"),
-        when(size(grams) > 0, entropyExpr(grams)).as("bigram_entropy"))
-  }
-
   /** Within-stream exact dedup — the stream-side complement of the
     * stream-static [[incrementalDedupStream]] family: arrivals are
     * deduplicated against EACH OTHER on the content fingerprint using
@@ -2059,16 +1743,6 @@ object Streaming {
         "content_len")
   }
 
-  /** Ingest face of [[graft.operators.UrlOps.canonicalize]] — URL
-    * normalization on arrivals is pure row-local regexp/HOF column
-    * arithmetic, so the face is a stateless select; the per-domain
-    * rollup ([[graft.operators.UrlOps.domainStats]]) stays a batch/
-    * foreachBatch concern like every other corpus-wide statistic. */
-  def urlCanonStream(docs: DataFrame,
-      timeCol: String = "event_time"): DataFrame =
-    graft.operators.UrlOps.canonicalize(
-      docs, col("doc_id"), col("url"), keep = Seq(timeCol))
-
   /** One canonicalized arrival for [[urlDedupStream]]. */
   final case class UrlDocIn(doc_id: Long, url_canon: String,
       domain: String, event_time: Timestamp)
@@ -2086,8 +1760,9 @@ object Streaming {
 
   /** Within-stream exact-URL dedup — the ingest twin of the q181 batch
     * semantics ([[graft.operators.UrlOps.urlDedup]]), composed over
-    * [[urlCanonStream]]: arrivals dedup against each other on the FULL
-    * canonical-URL string (exact key, no hash-collision false drops).
+    * [[graft.operators.UrlOps.canonicalize]]: arrivals dedup against
+    * each other on the FULL canonical-URL string (exact key, no
+    * hash-collision false drops).
     * Crawl frontiers refetch the same resource in bursts —
     * tracking-param variants, fragments, case — so the stage-zero drop
     * point is the ingest edge.
@@ -2110,7 +1785,8 @@ object Streaming {
       timeCol: String = "event_time"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    urlCanonStream(docs, timeCol)
+    graft.operators.UrlOps.canonicalize(
+        docs, col("doc_id"), col("url"), keep = Seq(timeCol))
       .select(col("doc_id").cast("long").as("doc_id"), col("url_canon"),
         col("domain"), col(timeCol).cast("timestamp").as("event_time"))
       .withWatermark("event_time", WatermarkDelay)
@@ -2151,36 +1827,6 @@ object Streaming {
     state.update(st.get)
     state.setTimeoutTimestamp(st.get.lastMs + SessionCloseMs)
     out.result().iterator
-  }
-
-  def htmlExtractStream(docs: DataFrame, minWords: Int = 6,
-      rescueWords: Int = 3, timeCol: String = "event_time"): DataFrame = {
-    import graft.operators.HtmlOps
-    val ls = HtmlOps.textLines(col("html"))
-    docs.select(col(timeCol), col("doc_id"), ls.as("_ls"))
-      .withColumn("_ks",
-        HtmlOps.contentKeepFlags(col("_ls"), minWords, rescueWords))
-      .select(col(timeCol), col("doc_id"),
-        concat_ws("\n", col("_ls")).as("text_clean"),
-        concat_ws("\n", filter(
-          zip_with(col("_ls"), col("_ks"), (l, k) => when(k, l)),
-          l => l.isNotNull)).as("content"),
-        size(filter(col("_ks"), k => k)).cast("long").as("n_kept"),
-        size(col("_ls")).cast("long").as("n_total"))
-  }
-
-  /** Ingest face of [[graft.operators.CorpusStatsOps.compressionScreen]]
-    * — the Gopher compression filter on arrivals, a stateless select on
-    * the codegen'd DEFLATE expression (no state, no watermark). */
-  def compressionScreenStream(docs: DataFrame,
-      lo: Double = 0.2, hi: Double = 1.1,
-      timeCol: String = "event_time"): DataFrame = {
-    graft.functions.CompressExpressions.register(docs.sparkSession)
-    val ratio =
-      graft.functions.CompressExpressions.deflateRatio(col("text"))
-    docs.select(col(timeCol), col("doc_id"),
-      ratio.as("deflate_ratio"),
-      coalesce(ratio >= lo && ratio <= hi, lit(false)).as("keep"))
   }
 
   /** Per-micro-batch corpus-health monitor — a `foreachBatch` sink that

@@ -11,7 +11,8 @@ import graft.operators.BpeOps
 object BpeDiag {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
+    val cpus = graft.GraftSession.localCores
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val docs = graft.Tables.documents(spark, sfDir)
     var t0 = System.nanoTime()

@@ -12,8 +12,9 @@ object MediaDiag {
   def main(args: Array[String]): Unit = {
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = GraftSession.localCores
     implicit val spark: org.apache.spark.sql.SparkSession =
-      GraftSession.builder("local[32]", 32).getOrCreate()
+      GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def probe(name: String, hashes: org.apache.spark.sql.DataFrame,

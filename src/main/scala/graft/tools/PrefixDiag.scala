@@ -15,8 +15,9 @@ object PrefixDiag {
   def main(args: Array[String]): Unit = {
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = GraftSession.localCores
     implicit val spark: org.apache.spark.sql.SparkSession =
-      GraftSession.builder("local[32]", 32).getOrCreate()
+      GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     HashExpressions.register(spark)
     val w = 2; val t = 0.9

@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions.col
 object Q71Solo {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
+    val cpus = GraftSession.localCores
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def loadavg: String =
       scala.io.Source.fromFile("/proc/loadavg").getLines().next()

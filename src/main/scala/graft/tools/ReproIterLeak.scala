@@ -26,7 +26,8 @@ object ReproIterLeak {
     val n = if (args.length > 1) args(1).toInt else 6
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
+    val cpus = GraftSession.localCores
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def cachedMb: Double = spark.sparkContext.getRDDStorageInfo
       .map(i => i.memSize + i.diskSize).sum / 1e6

@@ -11,8 +11,9 @@ object VideoDiag {
   def main(args: Array[String]): Unit = {
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = GraftSession.localCores
     implicit val spark: org.apache.spark.sql.SparkSession =
-      GraftSession.builder("local[32]", 32).getOrCreate()
+      GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val media = graft.queries.MediaNearDup.videoCorpus(spark, sfDir)
       .persist()

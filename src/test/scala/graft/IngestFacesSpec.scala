@@ -106,57 +106,6 @@ class IngestFacesSpec extends SparkSpec {
     }
   }
 
-  test("htmlExtractStream equals the batch extraction per doc") {
-    import graft.operators.HtmlOps
-    val docs = graft.Tables.documents(spark, sf)
-      .select("doc_id", "text")
-      .withColumn("html", HtmlOps.wrapHtml(col("doc_id"), col("text")))
-      .cache()
-    val batchText = HtmlOps.extractText(docs, col("doc_id"), col("html"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val batchContent = HtmlOps
-      .extractContent(docs, col("doc_id"), col("html"))
-      .collect().map(r => r.getLong(0) ->
-        ((r.getString(1), r.getAs[Long]("n_kept")))).toMap
-    val rows = docs.select("doc_id", "html").collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    val in = MemoryStream[(Long, String, Timestamp)]
-    val q = Streaming.htmlExtractStream(
-      in.toDS().toDF("doc_id", "html", "event_time"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("hes1").start()
-    try {
-      in.addData(rows.map { case (i, h) => (i, h, ts(T0)) }.toIndexedSeq: _*)
-      q.processAllAvailable()
-      val out = spark.table("hes1").collect()
-        .map(r => r.getLong(1) -> ((r.getString(2), r.getString(3),
-          r.getAs[Long]("n_kept")))).toMap
-      assert(out.size === rows.length)
-      out.foreach { case (d, (tc, content, nk)) =>
-        assert(tc === batchText(d), s"text_clean doc $d")
-        assert((content, nk) === batchContent(d), s"content doc $d")
-      }
-    } finally { q.stop(); docs.unpersist(blocking = false) }
-  }
-
-  test("compressionScreenStream flags the over-compressible arrival") {
-    val in = MemoryStream[(Long, String, Timestamp)]
-    val q = Streaming.compressionScreenStream(
-      in.toDS().toDF("doc_id", "text", "event_time"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("css1").start()
-    try {
-      in.addData(
-        (1L, Seq.fill(60)("w").mkString(" "), ts(T0)),
-        (2L, "the quick brown fox jumps over the lazy dog while the " +
-          "rain keeps falling on the quiet grey town tonight", ts(T0)))
-      q.processAllAvailable()
-      val out = spark.table("css1").collect()
-        .map(r => r.getLong(1) -> r.getAs[Boolean]("keep")).toMap
-      assert(out === Map(1L -> false, 2L -> true))
-    } finally q.stop()
-  }
-
   test("corpusStatsSink appends per-batch stats equal to the batch op") {
     import graft.operators.CorpusStatsOps
     val outDir = java.nio.file.Files
@@ -319,59 +268,6 @@ class IngestFacesSpec extends SparkSpec {
         r.getAs[Boolean]("needs_refit")).toMap
     assert(out === Map("en" -> false, "de" -> true,
       "zz" -> true, "new" -> true))
-  }
-
-  test("entropyScreenStream equals the batch entropy per doc (exact)") {
-    val in = MemoryStream[(Long, String, Timestamp)]
-    val q = Streaming.entropyScreenStream(
-      in.toDS().toDF("doc_id", "text", "event_time"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("ent1").start()
-    try {
-      val rows = Seq(
-        (1L, "a a a a"), (2L, "a b a b"), (3L, "w"),
-        (4L, "x y z x y q r s t u v"),
-        // zero-token docs: BOTH faces must emit the (0, 0, NULL, NULL,
-        // NULL) row — the batch op anchors on the doc frame so an
-        // empty doc is seen (and rejectable), not silently omitted
-        (5L, ""), (6L, "   "))
-      in.addData(rows.map { case (i, t) => (i, t, ts(T0)) }: _*)
-      q.processAllAvailable()
-      def k(r: org.apache.spark.sql.Row) = (
-        r.getAs[Long]("n_tokens"), r.getAs[Long]("n_types"),
-        Option(r.getAs[java.lang.Double]("word_entropy")),
-        Option(r.getAs[java.lang.Double]("norm_entropy")),
-        Option(r.getAs[java.lang.Double]("bigram_entropy")))
-      val got = spark.table("ent1").collect()
-        .map(r => r.getAs[Long]("doc_id") -> k(r)).toMap
-      val exp = CorpusStatsOps.entropyScreen(
-        rows.toDF("doc_id", "text"), col("doc_id"), col("text"))
-        .collect().map(r => r.getAs[Long]("did") -> (
-          r.getAs[Long]("n_tokens"), r.getAs[Long]("n_types"),
-          Option(r.getAs[java.lang.Double]("word_entropy")),
-          Option(r.getAs[java.lang.Double]("norm_entropy")),
-          Option(r.getAs[java.lang.Double]("bigram_entropy")))).toMap
-      assert(got === exp)
-      assert(got(5L) === ((0L, 0L, None, None, None)))
-      assert(got(6L) === ((0L, 0L, None, None, None)))
-    } finally q.stop()
-  }
-
-  test("urlCanonStream canonicalizes arrivals statelessly") {
-    val in = MemoryStream[(Long, String, Timestamp)]
-    val q = Streaming.urlCanonStream(
-      in.toDS().toDF("doc_id", "url", "event_time"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("url1").start()
-    try {
-      in.addData((1L, "https://CDN.s.co.uk:443/p?utm_source=a&id=3#f", ts(T0)))
-      q.processAllAvailable()
-      val r = spark.table("url1").collect().head
-      assert(r.getAs[String]("url_canon") === "https://cdn.s.co.uk/p?id=3")
-      assert(r.getAs[String]("domain") === "s.co.uk")
-      assert(r.getAs[Long]("n_params_dropped") === 1L)
-      assert(r.getAs[Timestamp]("event_time") === ts(T0))
-    } finally q.stop()
   }
 
   test("streamDedupStream collapses in-stream exact copies to one survivor") {

@@ -248,7 +248,7 @@ class StreamingRecoverySpec extends SparkSpec {
     val out = Files.createTempDirectory("graft-snap-out").toString
     val in = MemoryStream[(Long, String, String)]
 
-    def start() = Streaming.snapshotDeltaAuditStream(
+    def start() = AuditOps.snapshotDeltaAudit(
         in.toDS().toDF("doc_id", "text", "source"), index,
         col("doc_id"), Seq(col("text"), col("source")), keyName = "doc_id")
       .writeStream.outputMode("append").format("parquet")
@@ -259,7 +259,7 @@ class StreamingRecoverySpec extends SparkSpec {
     q1.stop()
 
     // restart from the checkpoint: only NEW arrivals are processed — the
-    // face is stateless, so recovery correctness is exactly-once replay
+    // operator is stateless, so recovery correctness is exactly-once replay
     val q2 = start()
     in.addData((2L, "beta EDITED", "web"), (9L, "new doc", "web"))
     q2.processAllAvailable()

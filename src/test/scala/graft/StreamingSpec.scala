@@ -508,98 +508,6 @@ class StreamingSpec extends SparkSpec {
     } finally { q.stop(); idx.unpersist(blocking = false) }
   }
 
-  test("snapshotDeltaAuditStream classifies arrivals like the batch face") {
-    import graft.operators.AuditOps
-    val snapshot = Seq(
-      (1L, "alpha", "web"), (2L, "beta", "web"),
-      (3L, "gamma", "book")).toDF("doc_id", "text", "source")
-    val index = AuditOps.snapshotHashIndex(snapshot, col("doc_id"),
-      Seq(col("text"), col("source")), keyName = "doc_id").persist()
-    val b1 = Seq(
-      (1L, "alpha", "web"),          // unchanged
-      (2L, "beta EDITED", "web"))    // changed
-    val b2 = Seq(
-      (3L, "gamma", "web"),          // changed (source moved)
-      (9L, "epsilon", "web"))        // added
-    val in = MemoryStream[(Long, String, String)]
-    val q = Streaming.snapshotDeltaAuditStream(
-      in.toDS().toDF("doc_id", "text", "source"), index,
-      col("doc_id"), Seq(col("text"), col("source")), keyName = "doc_id")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("snapaudit1").start()
-    try {
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-      def keyed(rs: Array[org.apache.spark.sql.Row]) =
-        rs.map(r => r.getLong(0) -> r.toSeq.tail).toMap
-      val streamed = keyed(spark.table("snapaudit1").collect())
-      val batch = keyed(AuditOps.snapshotDeltaAudit(
-        (b1 ++ b2).toDF("doc_id", "text", "source"), index,
-        col("doc_id"), Seq(col("text"), col("source")),
-        keyName = "doc_id").collect())
-      assert(batch(1L).head == "unchanged" && batch(2L).head == "changed" &&
-        batch(3L).head == "changed" && batch(9L).head == "added",
-        s"batch fixture sanity: $batch")
-      assert(streamed == batch,
-        "streamed verdicts and hashes must equal the batch face row-for-row")
-    } finally { q.stop(); index.unpersist(blocking = false) }
-  }
-
-  test("chunkDocsStream and piiRedactStream match their batch faces") {
-    import graft.operators.TextOps
-    val b1 = Seq(
-      (1L, (1 to 11).map(i => s"w$i").mkString(" ")),  // 3 chunks at 5/4
-      (2L, "mail me at a.b@example.com or https://x.example/y"))
-    val b2 = Seq(
-      (3L, "short doc"),                               // single short chunk
-      (4L, "call 555-123-4567 twice 555-123-4567"))
-    val all = (b1 ++ b2).toDF("doc_id", "text")
-    val in = MemoryStream[(Long, String)]
-    val src = in.toDS().toDF("doc_id", "text")
-    val qc = Streaming.chunkDocsStream(src, 5, 4)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("chunks1").start()
-    val qr = Streaming.piiRedactStream(src)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("redact1").start()
-    try {
-      in.addData(b1: _*); qc.processAllAvailable(); qr.processAllAvailable()
-      in.addData(b2: _*); qc.processAllAvailable(); qr.processAllAvailable()
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(_.toSeq).toSet
-      assert(rows(spark.table("chunks1")) ==
-        rows(TextOps.chunkDocs(all, col("doc_id"), col("text"), 5, 4)))
-      assert(rows(spark.table("chunks1")).size == 3 + 2 + 1 + 1,
-        "11w -> 3 chunks, 7w -> 2, 2w -> 1, 4w -> 1 at chunk 5 / stride 4")
-      assert(rows(spark.table("redact1")) ==
-        rows(TextOps.piiRedact(all, col("doc_id"), col("text"))))
-    } finally { qc.stop(); qr.stop() }
-  }
-
-  test("temperatureMixStream equals batch temperatureMix row-for-row") {
-    import graft.operators.TextOps
-    val d = ((0 until 40).map(i => (i.toLong, s"big source doc $i", "big")) ++
-      (40 until 50).map(i => (i.toLong, s"small source doc $i", "small")))
-    val corpusDf = d.toDF("doc_id", "text", "source")
-    val rates = TextOps.temperatureRates(corpusDf, col("source"), 0.5)
-    val in = MemoryStream[(Long, String, String)]
-    val q = Streaming.temperatureMixStream(
-      in.toDS().toDF("doc_id", "text", "source"), rates)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("tmix1").start()
-    try {
-      in.addData(d.take(25): _*); q.processAllAvailable()
-      in.addData(d.drop(25): _*); q.processAllAvailable()
-      val streamed = spark.table("tmix1").collect()
-        .map(r => r.getLong(0) -> r.toSeq.tail).toMap
-      val batch = TextOps.temperatureMix(corpusDf, col("doc_id"),
-        col("text"), col("source"), 0.5).collect()
-        .map(r => r.getLong(0) -> r.toSeq.tail).toMap
-      assert(streamed == batch,
-        "ingest-time assignment must reproduce the batch mix exactly")
-    } finally q.stop()
-  }
-
   test("sq8SemanticScreenStream: code-space screen drops planted near-dups, keeps novel") {
     import graft.operators.SimilarityOps
     def v(xs: Double*) = xs.map(_.toFloat).toArray
@@ -647,241 +555,6 @@ class StreamingSpec extends SparkSpec {
         batchDf, idx, cents, stats, 0.9)
         .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
       assert(batch == streamed, "face-on-batch must equal face-on-stream")
-    } finally q.stop()
-  }
-
-  test("sq8QuantizeStream encodes arriving vectors identically to batch") {
-    import graft.operators.SimilarityOps
-    val emb = graft.Tables.embeddings(spark, sf).limit(60).cache()
-    val stats = SimilarityOps.sq8Stats(emb, col("embedding"), 64)
-    val rows = emb.select(col("vec_id"), col("embedding")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val in = MemoryStream[(Long, Array[Float])]
-    val q = Streaming.sq8QuantizeStream(
-      in.toDS().toDF("vec_id", "embedding"), stats)
-      .select(col("vec_id"), col("codes"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("sq8q1").start()
-    try {
-      in.addData(rows.take(30).toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(rows.drop(30).toIndexedSeq: _*); q.processAllAvailable()
-      val streamed = spark.table("sq8q1").collect()
-        .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-      val batch = SimilarityOps.sq8Quantize(emb, stats,
-        col("vec_id"), col("embedding"))
-        .select(col("vec_id"), col("codes")).collect()
-        .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-      assert(streamed == batch,
-        "ingest-time codes must equal batch re-encode exactly")
-    } finally q.stop()
-  }
-
-  test("pqEncodeStream codes and reconstructions equal the relational batch index") {
-    import graft.operators.PQOps
-    val emb = graft.Tables.embeddings(spark, sf).limit(40).cache()
-    val cbDf = emb.where(col("vec_id") < 8)
-    val cents = cbDf.select(col("vec_id"), col("embedding")).collect()
-      .map(r => r.getLong(0).toInt -> r.getSeq[Float](1).toArray).toSeq
-    val rows = emb.select(col("vec_id"), col("embedding")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val in = MemoryStream[(Long, Array[Float])]
-    val q = Streaming.pqEncodeStream(
-      in.toDS().toDF("vec_id", "embedding"), cents, 8, 8)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("pqe1").start()
-    try {
-      in.addData(rows.take(20).toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(rows.drop(20).toIndexedSeq: _*); q.processAllAvailable()
-      val streamed = spark.table("pqe1").collect()
-        .map(r => r.getLong(0) -> ((r.getSeq[Int](1), r.getSeq[Double](2))))
-        .toMap
-      // compare against the RELATIONAL (window-argmin) form: the default
-      // pqIndex now runs the same row-local expressions as the stream, so
-      // parity against pqIndexRelational is the cross-shape proof
-      val batch = PQOps.pqIndexRelational(emb, cbDf,
-        col("vec_id"), col("embedding"), 8, 8).collect()
-        .map(r => r.getLong(0) -> ((r.getSeq[Int](1), r.getSeq[Double](2))))
-        .toMap
-      assert(streamed == batch,
-        "ingest-time PQ encode must equal the relational batch index exactly")
-    } finally q.stop()
-  }
-
-  test("bpeTokenizeStream tokens equal the batch tokenizer row-for-row") {
-    import graft.operators.BpeOps
-    val docs = graft.Tables.documents(spark, sf).where(col("doc_id") < 80)
-      .select("doc_id", "text").cache()
-    val mergesDf = BpeOps.bpeLearn(BpeOps.wordFreqs(docs, col("text")), 8)
-    val merges = mergesDf.orderBy("rank").select("left", "right").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSeq
-    val rows = docs.collect().map(r => (r.getLong(0), r.getString(1)))
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.bpeTokenizeStream(
-      in.toDS().toDF("doc_id", "text"), merges)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("bpe1").start()
-    try {
-      in.addData(rows.take(40).toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(rows.drop(40).toIndexedSeq: _*); q.processAllAvailable()
-      val streamed = spark.table("bpe1").collect()
-        .map(r => r.getLong(0) -> ((r.getSeq[String](1), r.getLong(2))))
-        .toMap
-      val batch = BpeOps.bpeTokenize(docs, col("doc_id"), col("text"),
-        mergesDf).collect()
-        .map(r => r.getLong(0) -> ((r.getSeq[String](1), r.getLong(2))))
-        .toMap
-      assert(batch.values.exists(_._1.exists(_.length > 5)),
-        "fixture sanity — some learned multi-char unit must appear")
-      assert(streamed == batch,
-        "ingest-time tokens must equal the batch tokenizer exactly")
-    } finally q.stop()
-  }
-
-  test("byteBpeTokenizeStream tokens equal the batch byte tokenizer") {
-    import graft.operators.BpeOps
-    val docs = graft.Tables.documents(spark, sf).where(col("doc_id") < 80)
-      .select("doc_id", "text").cache()
-    val mergesDf = BpeOps.bpeLearn(BpeOps.wordFreqs(docs, col("text")), 8,
-      symbolize = BpeOps.toByteSymbols)
-    val merges = mergesDf.orderBy("rank").select("left", "right").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSeq
-    val rows = docs.collect().map(r => (r.getLong(0), r.getString(1)))
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.byteBpeTokenizeStream(
-      in.toDS().toDF("doc_id", "text"), merges)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("bytebpe1").start()
-    try {
-      in.addData(rows.take(40).toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(rows.drop(40).toIndexedSeq: _*); q.processAllAvailable()
-      val streamed = spark.table("bytebpe1").collect()
-        .map(r => r.getLong(0) -> ((r.getSeq[String](1), r.getLong(2))))
-        .toMap
-      val batch = BpeOps.byteBpeTokenize(docs, col("doc_id"), col("text"),
-        mergesDf).collect()
-        .map(r => r.getLong(0) -> ((r.getSeq[String](1), r.getLong(2))))
-        .toMap
-      assert(batch.values.exists(_._1.exists(_.length > 2)),
-        "fixture sanity — some learned multi-byte unit must appear")
-      assert(streamed == batch,
-        "ingest-time byte tokens must equal the batch tokenizer exactly")
-    } finally q.stop()
-  }
-
-  test("gptByteBpeTokenizeStream tokens equal the batch pre-tokenized face") {
-    import graft.operators.BpeOps
-    val docs = graft.Tables.documents(spark, sf).where(col("doc_id") < 60)
-      .select("doc_id", "text").cache()
-    val mergesDf = BpeOps.bpeLearn(
-      BpeOps.preTokenFreqs(docs, col("text")), 8,
-      symbolize = BpeOps.toByteSymbols)
-    val merges = mergesDf.orderBy("rank").select("left", "right").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSeq
-    val rows = docs.collect().map(r => (r.getLong(0), r.getString(1)))
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.gptByteBpeTokenizeStream(
-      in.toDS().toDF("doc_id", "text"), merges)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("gptbpe1").start()
-    try {
-      in.addData(rows.toIndexedSeq: _*); q.processAllAvailable()
-      val streamed = spark.table("gptbpe1").collect()
-        .map(r => r.getLong(0) -> ((r.getSeq[String](1), r.getLong(2))))
-        .toMap
-      val batch = BpeOps.gptByteBpeTokenize(docs, col("doc_id"),
-        col("text"), mergesDf).collect()
-        .map(r => r.getLong(0) -> ((r.getSeq[String](1), r.getLong(2))))
-        .toMap
-      assert(streamed == batch,
-        "ingest-time GPT byte tokens must equal the batch face exactly")
-    } finally q.stop()
-    // specials ride the same kernel: ingest ≡ the batch special face
-    val sp = "<|endoftext|>"
-    val augRows = rows.map { case (id, t) => (id, t + sp + "en") }
-    val in2 = MemoryStream[(Long, String)]
-    val q2 = Streaming.gptByteBpeTokenizeStream(
-      in2.toDS().toDF("doc_id", "text"), merges, Seq(sp))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("gptbpe2").start()
-    try {
-      in2.addData(augRows.toIndexedSeq: _*); q2.processAllAvailable()
-      val streamed2 = spark.table("gptbpe2").collect()
-        .map(r => r.getLong(0) -> ((r.getSeq[String](1), r.getLong(2))))
-        .toMap
-      val batch2 = BpeOps.gptByteBpeTokenizeSpecial(
-        docs.withColumn("text", concat(col("text"), lit(sp), lit("en"))),
-        col("doc_id"), col("text"), mergesDf, Seq(sp)).collect()
-        .map(r => r.getLong(0) -> ((r.getSeq[String](1), r.getLong(2))))
-        .toMap
-      assert(streamed2 == batch2,
-        "ingest-time special tokens must equal the batch special face")
-    } finally q2.stop()
-  }
-
-  test("unigramTokenizeStream rows equal the batch tokenizer; novel chars price as unk") {
-    import graft.operators.UnigramOps
-    val docs = graft.Tables.documents(spark, sf).where(col("doc_id") < 60)
-      .select("doc_id", "text").cache()
-    val pieces = UnigramOps.unigramFit(docs, col("text"),
-      vocabSize = 120, seedSize = 240, emIters = 1)
-      .collect().map(r => (r.getString(0), r.getDouble(2))).toSeq
-    val rows = docs.collect().map(r => (r.getLong(0), r.getString(1)))
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.unigramTokenizeStream(
-      in.toDS().toDF("doc_id", "text"), pieces)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("ug1").start()
-    try {
-      in.addData(rows.take(30).toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(rows.drop(30).toIndexedSeq: _*); q.processAllAvailable()
-      // a doc in a script the fit never saw: segments (unk floor), no drop
-      in.addData((9999L, "щось цілком нове")); q.processAllAvailable()
-      val streamed = spark.table("ug1").collect()
-        .map(r => r.getLong(0) ->
-          ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
-      val batch = UnigramOps.unigramTokenize(docs, col("doc_id"),
-        col("text"), pieces).collect()
-        .map(r => r.getLong(0) ->
-          ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
-      assert(streamed.filterNot(_._1 == 9999L) == batch,
-        "ingest-time rows must equal the batch tokenizer exactly")
-      val novel = streamed(9999L)
-      assert(novel._1 == 14L, s"all-novel doc chars as pieces: $novel")
-      assert(novel._3 < -300.0, "every novel char priced at the unk floor")
-    } finally q.stop()
-  }
-
-  test("wordPieceTokenizeStream rows equal the batch tokenizer; unseen chars go [UNK]") {
-    import graft.operators.{BpeOps, WordPieceOps}
-    val docs = graft.Tables.documents(spark, sf).where(col("doc_id") < 60)
-      .select("doc_id", "text").cache()
-    val freqs = BpeOps.wordFreqs(docs, col("text"))
-    val vocab = WordPieceOps.wpVocab(
-        freqs, WordPieceOps.wpLearn(freqs, 8))
-      .orderBy("piece").collect().map(_.getString(0)).toSeq
-    val rows = docs.collect().map(r => (r.getLong(0), r.getString(1)))
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.wordPieceTokenizeStream(
-      in.toDS().toDF("doc_id", "text"), vocab)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("wp1").start()
-    try {
-      in.addData(rows.take(30).toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(rows.drop(30).toIndexedSeq: _*); q.processAllAvailable()
-      // a doc in a script the fit never saw: whole words go [UNK], no drop
-      in.addData((9999L, "щось нове")); q.processAllAvailable()
-      val streamed = spark.table("wp1").collect()
-        .map(r => r.getLong(0) ->
-          ((r.getSeq[String](1), r.getLong(2), r.getLong(3)))).toMap
-      val batch = WordPieceOps.wordPieceTokenizePieces(docs, col("doc_id"),
-        col("text"), vocab).collect()
-        .map(r => r.getLong(0) ->
-          ((r.getSeq[String](1), r.getLong(2), r.getLong(3)))).toMap
-      assert(streamed.filterNot(_._1 == 9999L) == batch,
-        "ingest-time rows must equal the batch tokenizer exactly")
-      assert(streamed(9999L)._1 == Seq(WordPieceOps.Unk, WordPieceOps.Unk),
-        "novel-script words collapse to whole-word [UNK], never a drop")
-      assert(streamed(9999L)._3 == 2L)
     } finally q.stop()
   }
 
@@ -942,118 +615,6 @@ class StreamingSpec extends SparkSpec {
         (1L, "tble") -> (("table", 1L, 10L)),
         (2L, "aable") -> (("table", 1L, 10L))), s"$got")
     } finally q.stop()
-  }
-
-  test("gopherRepetitionStream verdicts equal the batch screen row-for-row") {
-    val docs = graft.Tables.documents(spark, sf).where(col("doc_id") < 60)
-      .select("doc_id", "text").cache()
-    val rows = docs.collect().map(r => (r.getLong(0), r.getString(1)))
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.gopherRepetitionStream(in.toDS().toDF("doc_id", "text"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("gopher1").start()
-    try {
-      in.addData(rows.take(30).toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(rows.drop(30).toIndexedSeq: _*); q.processAllAvailable()
-      val key = (r: org.apache.spark.sql.Row) =>
-        r.getLong(0) -> r.getValuesMap[Any](r.schema.fieldNames.drop(1).toSeq)
-      val streamed = spark.table("gopher1").collect().map(key).toMap
-      val batch = graft.operators.TextOps.gopherRepetition(
-        docs, col("doc_id"), col("text")).collect().map(key).toMap
-      assert(streamed == batch,
-        "ingest-time repetition verdicts must equal the batch screen exactly")
-    } finally q.stop()
-  }
-
-  test("gopherQualityStream verdicts equal the batch screen row-for-row") {
-    val docs = graft.Tables.documents(spark, sf).where(col("doc_id") < 60)
-      .select("doc_id", "text").cache()
-    val rows = docs.collect().map(r => (r.getLong(0), r.getString(1)))
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.gopherQualityStream(in.toDS().toDF("doc_id", "text"))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("gopherq1").start()
-    try {
-      in.addData(rows.toIndexedSeq: _*); q.processAllAvailable()
-      val key = (r: org.apache.spark.sql.Row) =>
-        r.getLong(0) -> r.getValuesMap[Any](r.schema.fieldNames.drop(1).toSeq)
-      val streamed = spark.table("gopherq1").collect().map(key).toMap
-      val batch = graft.operators.TextOps.gopherQuality(
-        docs, col("doc_id"), col("text")).collect().map(key).toMap
-      assert(streamed == batch,
-        "ingest-time quality verdicts must equal the batch screen exactly")
-    } finally q.stop()
-  }
-
-  test("normalizeTextStream and whitenStream equal their batch faces") {
-    // normalize: stateless string chain
-    val docs = Seq((1L, "  A\tB  "), (2L, "ok"), (3L, ""))
-      .toDF("doc_id", "text")
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.normalizeTextStream(
-      in.toDS().toDF("doc_id", "text"), keepText = true)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("norm1").start()
-    try {
-      in.addData((1L, "  A\tB  "), (2L, "ok"), (3L, "")); q.processAllAvailable()
-      val streamed = spark.table("norm1").collect()
-        .map(r => r.getLong(0) -> r.getAs[String]("norm_text")).toMap
-      val batch = graft.operators.TextOps.normalizeText(
-        docs, col("doc_id"), col("text"), keepText = true).collect()
-        .map(r => r.getLong(0) -> r.getAs[String]("norm_text")).toMap
-      assert(streamed == batch && streamed(1L) == "a b")
-    } finally q.stop()
-    // whiten: frozen fitted model applied to arrivals
-    import graft.operators.WhitenOps
-    val emb = graft.Tables.embeddings(spark, sf).where(col("vec_id") < 60)
-      .select("vec_id", "embedding").cache()
-    val model = WhitenOps.fitZca(
-      WhitenOps.moments(emb, col("embedding"), 64), 64)
-    val rows = emb.collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1)))
-    val in2 = MemoryStream[(Long, Seq[Float])]
-    val q2 = Streaming.whitenStream(
-      in2.toDS().toDF("vec_id", "embedding"), model)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("whiten1").start()
-    try {
-      in2.addData(rows.toIndexedSeq: _*); q2.processAllAvailable()
-      val streamed = spark.table("whiten1").collect()
-        .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-      val batch = WhitenOps.whiten(emb, col("vec_id"), col("embedding"),
-        model).collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-      assert(streamed == batch,
-        "ingest-time whitening must equal the batch apply exactly")
-    } finally q2.stop()
-  }
-
-  test("blocklist screen and redact streams equal their batch faces") {
-    val pats = Seq("slow", "fast table", "agg")
-    val docs = graft.Tables.documents(spark, sf).where(col("doc_id") < 60)
-      .select("doc_id", "text").cache()
-    val rows = docs.collect().map(r => (r.getLong(0), r.getString(1)))
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.blocklistScreenStream(
-      in.toDS().toDF("doc_id", "text"), pats)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("block1").start()
-    val in2 = MemoryStream[(Long, String)]
-    val q2 = Streaming.blocklistRedactStream(
-      in2.toDS().toDF("doc_id", "text"), pats)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("block2").start()
-    try {
-      in.addData(rows.toIndexedSeq: _*); q.processAllAvailable()
-      in2.addData(rows.toIndexedSeq: _*); q2.processAllAvailable()
-      val key = (r: org.apache.spark.sql.Row) =>
-        r.getLong(0) -> r.getValuesMap[Any](r.schema.fieldNames.drop(1).toSeq)
-      assert(spark.table("block1").collect().map(key).toMap ==
-        graft.operators.TextOps.blocklistScreen(docs, col("doc_id"),
-          col("text"), pats).collect().map(key).toMap)
-      assert(spark.table("block2").collect().map(key).toMap ==
-        graft.operators.TextOps.blocklistRedact(docs, col("doc_id"),
-          col("text"), pats).collect().map(key).toMap)
-    } finally { q.stop(); q2.stop() }
   }
 
   test("cdcApplySink materializes the change log to the one-shot MERGE state") {
@@ -1383,39 +944,6 @@ class StreamingSpec extends SparkSpec {
         "drifted window must equal the batch monitor row-for-row")
       assert(!calm._5 && hot._5,
         s"refit must flag exactly the drifted window: calm=$calm hot=$hot")
-    } finally q.stop()
-  }
-
-  test("mediaNearDupScreenStream: exact-hamming screen, band collision alone never drops") {
-    // Corpus: one good fingerprint; one BROKEN row (ok=false, hash 0) that
-    // must be excluded from the index or it would absorb every zero-ish delta.
-    val h = 0x0123456789abcdefL
-    val corpus = Seq((1L, true, h), (2L, false, 0L))
-      .toDF("media_id", "ok", "dhash")
-    val delta = Seq(
-      (11L, true, h),                         // hamming 0 -> dropped
-      (12L, true, h ^ 0x3L),                  // hamming 2 -> dropped
-      // band 0 byte IDENTICAL but one bit flipped in each other band:
-      // hamming 7 > maxHamming 6 -> the bucket collision routes it to the
-      // verify and the verify must KEEP it (the 256-bucket lesson)
-      (13L, true, h ^ 0x0101010101010100L),
-      (14L, true, 0L),                        // hamming 32 from h -> kept;
-                                              // would be dropped if the
-                                              // broken corpus row indexed
-      (15L, false, 0L))                       // broken delta: passes through
-    val in = MemoryStream[(Long, Boolean, Long)]
-    val q = Streaming.imageNearDupScreenStream(
-      in.toDS().toDF("media_id", "ok", "dhash"), corpus)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("mediascreen1").start()
-    try {
-      in.addData(delta: _*); q.processAllAvailable()
-      val out = spark.table("mediascreen1").collect()
-        .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-      assert(out.keySet == Set(13L, 14L, 15L),
-        s"survivors must be exactly {13,14,15}, got ${out.keySet}")
-      assert(!out(15L), "broken payloads keep their ok=false flag")
-      assert(out(13L) && out(14L))
     } finally q.stop()
   }
 
@@ -1832,45 +1360,5 @@ class StreamingSpec extends SparkSpec {
         .select("kwh").as[Double].head()
       assert(streamKwh == batchKwh, "streaming agg must equal batch agg")
     } finally q.stop()
-  }
-
-  test("negativeSamplesStream replays batch negatives bit-identically; novel arrivals still draw") {
-    import graft.operators.{BpeOps, TextOps}
-    val corpus = Seq(
-      (1L, "x x x y common words here"),
-      (2L, "q q common words again"),
-      (3L, "y words x q common")).toDF("doc_id", "text")
-    // fit-time: freeze the noise distribution on the training vocabulary
-    val noise = TextOps.noiseTable(
-      BpeOps.wordFreqs(corpus, col("text"))).cache()
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.negativeSamplesStream(
-      in.toDS().toDF("doc_id", "text"), noise, k = 3)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("negs1").start()
-    try {
-      in.addData(
-        (1L, "x x x y common words here"),
-        (2L, "q q common words again"))
-      q.processAllAvailable()
-      // an arrival the fit never saw: draws from the FROZEN table anyway
-      in.addData((4L, "entirely novel arrival text"))
-      q.processAllAvailable()
-      val got = spark.table("negs1")
-        .as[(Long, Long, String, Long)].collect().sortBy(r => (r._1, r._2))
-      // every (doc, draw) resolves to exactly one word — for novel docs too
-      assert(got.length == 9 && got.map(r => (r._1, r._2)).distinct.length == 9)
-      // replayed docs: bit-identical to the batch operator (contract)
-      val batch = TextOps.negativeSamples(
-          corpus, col("doc_id"), col("text"), k = 3)
-        .where(col("doc_id").isin(1L, 2L))
-        .as[(Long, Long, String, Long)].collect().sortBy(r => (r._1, r._2))
-      assert(got.filter(_._1 <= 2L).toSeq == batch.toSeq,
-        "stream negatives must equal batch negatives on replayed docs")
-      // novel-doc negatives come from the frozen vocabulary only
-      val vocab = BpeOps.wordFreqs(corpus, col("text"))
-        .select("word").as[String].collect().toSet
-      assert(got.filter(_._1 == 4L).forall(r => vocab(r._3)))
-    } finally { q.stop(); noise.unpersist() }
   }
 }
