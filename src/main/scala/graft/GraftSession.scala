@@ -1,27 +1,16 @@
 package graft
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.{FloatVectorDot, PolyHash}
 
-/** Catalyst extension installing graft's native expressions permanently in
-  * every session built with them (`.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.GraftExtensions`) — no per-call temp
-  * registration needed, and the functions are visible to plain SQL too. */
+/** Catalyst extension installing every graft native function
+  * ([[graft.functions.NativeFunctions.table]]) once, when a session is
+  * built. It is the only code that puts a function into a session.
+  * [[GraftSession.builder]] adds it; a session built any other way needs
+  * Spark's own `spark.sql.extensions=graft.GraftExtensions`. The functions
+  * are then visible to DataFrame and plain SQL callers alike. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new FunctionIdentifier("poly_hash"),
-      new ExpressionInfo(classOf[PolyHash].getName, "poly_hash"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        PolyHash(exprs.head)))
-    e.injectFunction((
-      new FunctionIdentifier("float_vector_dot"),
-      new ExpressionInfo(classOf[FloatVectorDot].getName, "float_vector_dot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        FloatVectorDot(exprs.head, exprs(1))))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    graft.functions.NativeFunctions.table.foreach(e.injectFunction)
 }
 
 /** Canonical session factory: the configuration every graft entry point

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -238,30 +237,7 @@ object AcRedact {
 object AcExpressions {
   val FnName = "ac_screen"
 
-  /** Idempotently register `ac_screen(text, patterns)` — `patterns` a
-    * foldable array<string> literal (the frozen blocklist). */
-  def register(spark: SparkSession): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      exprs => {
-        def bad(what: String) = new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-            s"$FnName(text, patterns): $what"))
-        if (exprs.length != 2) throw bad("exactly 2 arguments required")
-        if (!exprs(1).foldable)
-          throw bad("patterns must be a foldable array<string> literal")
-        val v = exprs(1).eval()
-        if (v == null) throw bad("patterns non-null")
-        val arr = v.asInstanceOf[ArrayData]
-        val pats = (0 until arr.numElements())
-          .map(i => arr.getUTF8String(i).toString)
-        AcScreen(exprs.head, pats)
-      }, "scala_udf")
-  }
-
-  /** Compiled blocklist-screen column (see [[AcScreen]]); call
-    * [[register]] on the session first. */
+  /** Compiled blocklist-screen column (see [[AcScreen]]). */
   def acScreen(text: Column, patterns: Seq[String]): Column = {
     val f = org.apache.spark.sql.functions
     call_function(FnName, text,
@@ -270,30 +246,7 @@ object AcExpressions {
 
   val RedactFnName = "ac_redact"
 
-  /** Idempotently register `ac_redact(text, patterns, marker)`. */
-  def registerRedact(spark: SparkSession): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      RedactFnName,
-      exprs => {
-        def bad(what: String) = new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-            s"$RedactFnName(text, patterns, marker): $what"))
-        if (exprs.length != 3) throw bad("exactly 3 arguments required")
-        if (!exprs(1).foldable || !exprs(2).foldable)
-          throw bad("patterns and marker must be foldable literals")
-        val v = exprs(1).eval()
-        val m = exprs(2).eval()
-        if (v == null || m == null) throw bad("patterns/marker non-null")
-        val arr = v.asInstanceOf[ArrayData]
-        val pats = (0 until arr.numElements())
-          .map(i => arr.getUTF8String(i).toString)
-        AcRedact(exprs.head, pats, m.asInstanceOf[UTF8String].toString)
-      }, "scala_udf")
-  }
-
-  /** Compiled blocklist-redaction column (see [[AcRedact]]); call
-    * [[registerRedact]] on the session first. */
+  /** Compiled blocklist-redaction column (see [[AcRedact]]). */
   def acRedact(text: Column, patterns: Seq[String],
       marker: String): Column = {
     val f = org.apache.spark.sql.functions

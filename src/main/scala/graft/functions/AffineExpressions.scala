@@ -2,7 +2,7 @@ package graft.functions
 
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -67,34 +67,7 @@ case class AffineProject(child: Expression, w: Array[Double],
 object AffineExpressions {
   val FnName = "affine_project"
 
-  /** Idempotently register `affine_project(vec, w, mu, k, dim)` — `w`
-    * (row-major k×dim) and `mu` must be foldable array<double> literals
-    * (the frozen fitted transform). */
-  def register(spark: SparkSession): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      exprs => {
-        def bad(what: String) = new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-            s"$FnName(vec, w, mu, k, dim): $what"))
-        if (exprs.length != 5) throw bad("exactly 5 arguments required")
-        if (!exprs.drop(1).forall(_.foldable))
-          throw bad("w/mu/k/dim must be foldable literals")
-        def darr(e: Expression, what: String): Array[Double] = {
-          val v = e.eval()
-          if (v == null) throw bad(s"$what non-null")
-          val a = v.asInstanceOf[ArrayData]
-          Array.tabulate(a.numElements())(a.getDouble)
-        }
-        AffineProject(exprs.head, darr(exprs(1), "w"), darr(exprs(2), "mu"),
-          exprs(3).eval().asInstanceOf[Number].intValue(),
-          exprs(4).eval().asInstanceOf[Number].intValue())
-      }, "scala_udf")
-  }
-
-  /** Compiled affine-projection column (see [[AffineProject]]); call
-    * [[register]] on the session first. */
+  /** Compiled affine-projection column (see [[AffineProject]]). */
   def affineProject(vec: Column, w: Array[Double], mu: Array[Double],
       k: Int, dim: Int): Column = {
     val f = org.apache.spark.sql.functions

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 
 /** Bloom-filter build/probe Columns over Spark's own `util.sketch
@@ -22,20 +20,9 @@ object BloomFunctions {
   val AggName = "graft_bloom_agg"
   val ProbeName = "graft_bloom_might_contain"
 
-  /** Idempotently register both functions in this session's registry. */
-  def register(spark: SparkSession): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      AggName, exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)),
-      "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      ProbeName, exprs => BloomFilterMightContain(exprs(1), exprs(0)),
-      "scala_udf")
-  }
-
   /** Bloom filter over a LONG key column, sized for `numItems` expected
     * distinct keys at `bitsPerItem` bits each (8 bits/item ≈ 2% false-
-    * positive rate). Returns one BINARY row; requires [[register]]. */
+    * positive rate). Returns one BINARY row. */
   def bloomAgg(key: Column, numItems: Long, bitsPerItem: Int = 8): Column =
     call_function(AggName, key,
       org.apache.spark.sql.functions.lit(numItems),
@@ -43,7 +30,7 @@ object BloomFunctions {
 
   /** Probe: true iff `key` MIGHT be in the serialized filter (false
     * positives possible at the configured rate, false negatives never).
-    * `bloom` must be foldable (a literal); requires [[register]]. */
+    * `bloom` must be foldable (a literal). */
   def mightContain(key: Column, bloom: Column): Column =
     call_function(ProbeName, key, bloom)
 }

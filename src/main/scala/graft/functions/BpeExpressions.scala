@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -499,10 +499,6 @@ case class TokenIds(child: Expression, vocab: Seq[(String, Long)])
 object BpeExpressions {
   val FnName = "bpe_encode"
 
-  /** Idempotently register `bpe_encode(text, merges)` where `merges` is a
-    * FOLDABLE array<struct<l string, r string>> literal (the frozen merge
-    * table — tokenizers are fitted once, the table is a plan-time
-    * constant). */
   /** Byte-level variant's function name (see [[BpeEncode.byteLevel]]). */
   val ByteFnName = "byte_bpe_encode"
 
@@ -519,98 +515,10 @@ object BpeExpressions {
   /** The vocabulary id-lookup kernel (see [[TokenIds]]). */
   val TokenIdsFnName = "token_ids"
 
-  def register(spark: SparkSession): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      GptPreFnName,
-      exprs => {
-        if (exprs.length != 1)
-          throw new org.apache.spark.sql.AnalysisException(
-            "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-              s"$GptPreFnName(text): exactly 1 argument required"))
-        GptPreTokenize(exprs.head)
-      }, "scala_udf")
-    def parseMerges(name: String, exprs: Seq[Expression])
-        : (Expression, Seq[(String, String)]) = {
-      def bad(what: String) =
-        new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-            s"$name(text, merges): merges argument must be $what"))
-      if (exprs.length != 2) throw bad("present (exactly 2 arguments)")
-      if (!exprs(1).foldable)
-        throw bad("a foldable array<struct<l,r>> literal")
-      val v = exprs(1).eval()
-      if (v == null) throw bad("non-null")
-      val arr = v.asInstanceOf[ArrayData]
-      val merges = (0 until arr.numElements()).map { i =>
-        val row = arr.getStruct(i, 2)
-        (row.getUTF8String(0).toString, row.getUTF8String(1).toString)
-      }
-      (exprs.head, merges)
-    }
-    Seq((FnName, false, false), (ByteFnName, true, false),
-      (BytePreFnName, true, true)).foreach {
-      case (name, byteLevel, wholeInput) =>
-        classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-          name,
-          exprs => {
-            val (text, merges) = parseMerges(name, exprs)
-            BpeEncode(text, merges, byteLevel, wholeInput)
-          }, "scala_udf")
-    }
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      GptByteBpeFnName,
-      exprs => {
-        def bad(what: String) =
-          new org.apache.spark.sql.AnalysisException(
-            "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-              (s"$GptByteBpeFnName(text, merges[, specials]): specials " +
-                s"argument must be $what")))
-        // optional 3rd arg: foldable array<string> of ATOMIC special
-        // tokens (document separators etc. — the tiktoken contract)
-        val specials: Seq[String] =
-          if (exprs.length <= 2) Nil
-          else {
-            if (exprs.length != 3)
-              throw bad("the only extra argument (at most 3 total)")
-            if (!exprs(2).foldable)
-              throw bad("a foldable array<string> literal")
-            val v = exprs(2).eval()
-            if (v == null) throw bad("non-null")
-            val arr = v.asInstanceOf[ArrayData]
-            (0 until arr.numElements()).map { i =>
-              val sp = arr.getUTF8String(i)
-              if (sp == null || sp.numChars() == 0)
-                throw bad("free of null/empty entries")
-              sp.toString
-            }
-          }
-        val (text, merges) = parseMerges(GptByteBpeFnName, exprs.take(2))
-        GptByteBpe(text, merges, specials)
-      }, "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      TokenIdsFnName,
-      exprs => {
-        def bad(what: String) =
-          new org.apache.spark.sql.AnalysisException(
-            "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-              s"$TokenIdsFnName(tokens, vocab): vocab must be $what"))
-        if (exprs.length != 2) throw bad("present (exactly 2 arguments)")
-        if (!exprs(1).foldable)
-          throw bad("a foldable array<struct<t,i>> literal")
-        val v = exprs(1).eval()
-        if (v == null) throw bad("non-null")
-        val arr = v.asInstanceOf[ArrayData]
-        val vocab = (0 until arr.numElements()).map { i =>
-          val row = arr.getStruct(i, 2)
-          (row.getUTF8String(0).toString, row.getLong(1))
-        }
-        TokenIds(exprs.head, vocab)
-      }, "scala_udf")
-  }
-
-  /** Compiled-tokenizer column (see [[BpeEncode]]); call [[register]] on
-    * the session first. */
+  /** Compiled-tokenizer column (see [[BpeEncode]]). `merges` becomes a
+    * FOLDABLE array<struct<l string, r string>> literal (the frozen merge
+    * table — tokenizers are fitted once, the table is a plan-time
+    * constant). */
   def bpeEncode(text: Column, merges: Seq[(String, String)]): Column = {
     val lit = org.apache.spark.sql.functions.typedlit(merges.map {
       case (l, r) => BpeMergeRow(l, r) })
@@ -637,16 +545,15 @@ object BpeExpressions {
     call_function(BytePreFnName, token, lit)
   }
 
-  /** One-scan GPT pre-tokenization column (see [[GptPreTokenize]]);
-    * call [[register]] on the session first. */
+  /** One-scan GPT pre-tokenization column (see [[GptPreTokenize]]). */
   def gptPreTokens(text: Column): Column =
     call_function(GptPreFnName, text)
 
   /** FUSED pre-tokenize∘byte-BPE column (see [[GptByteBpe]]) — the
-    * production GPT tokenize path; call [[register]] on the session
-    * first. Pass `specials` for ATOMIC special tokens (document
-    * separators — never pre-tokenized, never merged; each emits as one
-    * token, its UTF-8 hex, so the decode identity holds). */
+    * production GPT tokenize path. Pass `specials` for ATOMIC special
+    * tokens (document separators — never pre-tokenized, never merged;
+    * each emits as one token, its UTF-8 hex, so the decode identity
+    * holds). */
   def gptByteBpe(text: Column, merges: Seq[(String, String)],
       specials: Seq[String] = Nil): Column = {
     val lit = org.apache.spark.sql.functions.typedlit(merges.map {
@@ -656,9 +563,8 @@ object BpeExpressions {
       org.apache.spark.sql.functions.typedlit(specials))
   }
 
-  /** Vocabulary id-lookup column (see [[TokenIds]]); call [[register]]
-    * on the session first. `vocab` is the frozen (token, id) table —
-    * duplicates resolve to the smallest id. */
+  /** Vocabulary id-lookup column (see [[TokenIds]]). `vocab` is the
+    * frozen (token, id) table — duplicates resolve to the smallest id. */
   def tokenIds(tokens: Column, vocab: Seq[(String, Long)]): Column = {
     val lit = org.apache.spark.sql.functions.typedlit(vocab.map {
       case (t, i) => VocabIdRow(t, i) })
@@ -667,11 +573,11 @@ object BpeExpressions {
 }
 
 /** Struct shape of one vocabulary row in the [[BpeExpressions.tokenIds]]
-  * literal: field order (t, i) is the wire contract the registration
-  * parses. */
+  * literal: field order (t, i) is the wire contract the builder in
+  * [[NativeFunctions]] parses. */
 case class VocabIdRow(t: String, i: Long)
 
 /** Struct shape of one merge row in the [[BpeExpressions.bpeEncode]]
-  * literal: field order (l, r) is the wire contract the registration
-  * parses. */
+  * literal: field order (l, r) is the wire contract the builder in
+  * [[NativeFunctions]] parses. */
 case class BpeMergeRow(l: String, r: String)

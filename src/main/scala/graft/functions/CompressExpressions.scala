@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
@@ -87,20 +87,6 @@ object CompressKernel {
 
 object CompressExpressions {
   val FnName = "deflate_ratio"
-
-  /** Idempotently register `deflate_ratio` in the session registry. */
-  def register(spark: SparkSession): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      exprs => {
-        if (exprs.length != 1)
-          throw new org.apache.spark.sql.AnalysisException(
-            "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-              s"$FnName(text): exactly 1 argument required, got ${exprs.length}"))
-        DeflateRatio(exprs.head)
-      }, "scala_udf")
-  }
 
   /** Codegen'd DEFLATE compression ratio of a string column. */
   def deflateRatio(c: Column): Column = call_function(FnName, c)

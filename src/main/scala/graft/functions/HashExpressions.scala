@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
@@ -204,90 +204,25 @@ object HashExpressions {
   val GramLenFnName = "gram_hash_lens"
   val CoordFnName = "coordinated_sketch_stats"
 
-  /** Idempotently register `poly_hash`, `shingle_hashes` and
-    * `sorted_intersect_count` in this session's function registry. */
-  def register(spark: SparkSession): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => PolyHash(exprs.head), "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      ShingleFnName,
-      exprs => {
-        // the width is folded into the generated code, so it must be a
-        // non-null literal — guard BEFORE eval() so a SQL caller passing a
-        // column or NULL gets an analysis error naming the requirement
-        // instead of an opaque NPE/ClassCastException at plan time
-        def bad(what: String) = new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-            s"$ShingleFnName(text, w): width argument must be $what"))
-        if (exprs.length != 2) throw bad("present (exactly 2 arguments)")
-        if (!exprs(1).foldable) throw bad("a foldable integer literal")
-        val w = exprs(1).eval()
-        if (w == null) throw bad("non-null")
-        if (!w.isInstanceOf[Number]) throw bad("an integer")
-        ShingleHashes(exprs.head, w.asInstanceOf[Number].intValue())
-      }, "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      GramLenFnName,
-      exprs => {
-        def bad(what: String) = new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-            s"$GramLenFnName(text, w): width argument must be $what"))
-        if (exprs.length != 2) throw bad("present (exactly 2 arguments)")
-        if (!exprs(1).foldable) throw bad("a foldable integer literal")
-        val w = exprs(1).eval()
-        if (w == null) throw bad("non-null")
-        if (!w.isInstanceOf[Number]) throw bad("an integer")
-        GramHashLens(exprs.head, w.asInstanceOf[Number].intValue())
-      }, "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      IntersectFnName,
-      exprs => {
-        if (exprs.length != 2)
-          throw new org.apache.spark.sql.AnalysisException(
-            "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-              s"$IntersectFnName(a, b): exactly 2 arguments required, got ${exprs.length}"))
-        SortedIntersectCount(exprs.head, exprs(1))
-      }, "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      CoordFnName,
-      exprs => {
-        def bad(what: String) = new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-            s"$CoordFnName(a, b, k): k argument must be $what"))
-        if (exprs.length != 3) throw bad("present (exactly 3 arguments)")
-        if (!exprs(2).foldable) throw bad("a foldable integer literal")
-        val k = exprs(2).eval()
-        if (k == null) throw bad("non-null")
-        if (!k.isInstanceOf[Number]) throw bad("an integer")
-        CoordinatedSketchStats(exprs.head, exprs(1),
-          k.asInstanceOf[Number].intValue())
-      }, "scala_udf")
-  }
-
-  /** Codegen'd polynomial string hash (see [[PolyHash]]); requires
-    * [[register]] on the session. */
+  /** Codegen'd polynomial string hash (see [[PolyHash]]). */
   def polyHash(c: Column): Column = call_function(FnName, c)
 
-  /** Codegen'd one-pass shingle hashing (see [[ShingleHashes]]); requires
-    * [[register]] on the session. */
+  /** Codegen'd one-pass shingle hashing (see [[ShingleHashes]]). */
   def shingleHashes(text: Column, w: Int): Column =
     call_function(ShingleFnName, text, org.apache.spark.sql.functions.lit(w))
 
   /** Codegen'd one-pass k-gram (hash, char length) pairs (see
-    * [[GramHashLens]]); requires [[register]] on the session. */
+    * [[GramHashLens]]). */
   def gramHashLens(text: Column, w: Int): Column =
     call_function(GramLenFnName, text, org.apache.spark.sql.functions.lit(w))
 
   /** Codegen'd merge-walk `|A ∩ B|` over two ASCENDING long-array columns
-    * (see [[SortedIntersectCount]]); requires [[register]] on the
-    * session. */
+    * (see [[SortedIntersectCount]]). */
   def sortedIntersectCount(a: Column, b: Column): Column =
     call_function(IntersectFnName, a, b)
 
   /** Codegen'd coordinated bottom-k sample stats over two ASCENDING
-    * sketch-array columns (see [[CoordinatedSketchStats]]); requires
-    * [[register]] on the session. */
+    * sketch-array columns (see [[CoordinatedSketchStats]]). */
   def coordinatedSketchStats(a: Column, b: Column, k: Int): Column =
     call_function(CoordFnName, a, b, org.apache.spark.sql.functions.lit(k))
 

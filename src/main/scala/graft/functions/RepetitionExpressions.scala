@@ -2,7 +2,7 @@ package graft.functions
 
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -235,21 +235,7 @@ object RepetitionSignals {
 object RepetitionExpressions {
   val FnName = "repetition_signals"
 
-  /** Idempotently register `repetition_signals(text)`. */
-  def register(spark: SparkSession): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      exprs => {
-        if (exprs.length != 1)
-          throw new org.apache.spark.sql.AnalysisException(
-            "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-              s"$FnName(text): exactly 1 argument required"))
-        RepetitionSignals(exprs.head)
-      }, "scala_udf")
-  }
-
   /** Compiled repetition-signals struct column (see
-    * [[RepetitionSignals]]); call [[register]] on the session first. */
+    * [[RepetitionSignals]]). */
   def repetitionSignals(text: Column): Column = call_function(FnName, text)
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -150,31 +150,9 @@ object SpanCorrupt {
 object SpanExpressions {
   val FnName = "span_corrupt"
 
-  /** Idempotently register `span_corrupt(text, doc_id, maskRate,
-    * meanSpan)` (rate/mean must be foldable literals — they are baked
-    * into the kernel's thresholds). */
-  def register(spark: SparkSession): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      exprs => {
-        def bad(what: String) = new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-            s"$FnName(text, doc_id, rate, mean): $what"))
-        if (exprs.length != 4) throw bad("exactly 4 arguments required")
-        if (!exprs(2).foldable || !exprs(3).foldable)
-          throw bad("rate and mean must be foldable literals")
-        val rate = exprs(2).eval()
-        val mean = exprs(3).eval()
-        if (rate == null || mean == null) throw bad("rate/mean non-null")
-        SpanCorrupt(exprs.head, exprs(1),
-          rate.asInstanceOf[Number].doubleValue(),
-          mean.asInstanceOf[Number].intValue())
-      }, "scala_udf")
-  }
-
-  /** Compiled span-corruption struct column (see [[SpanCorrupt]]); call
-    * [[register]] on the session first. */
+  /** Compiled span-corruption struct column (see [[SpanCorrupt]]).
+    * `maskRate` and `meanSpan` become literals baked into the kernel's
+    * thresholds. */
   def spanCorrupt(text: Column, docId: Column, maskRate: Double,
       meanSpan: Int): Column =
     call_function(FnName, text, docId,

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -140,34 +140,9 @@ object UnigramExpressions {
     * segmentation of known text never routes through <unk>). */
   val UnkLogp: Double = math.log(1e-10)
 
-  /** Idempotently register `unigram_encode(text, pieces)` where `pieces`
-    * is a FOLDABLE array<struct<piece string, logp double>> literal (the
-    * frozen fitted table — plan-time constant, the [[BpeExpressions]]
-    * contract). */
-  def register(spark: SparkSession): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      exprs => {
-        def bad(what: String) = new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-            s"$FnName(text, pieces): pieces argument must be $what"))
-        if (exprs.length != 2) throw bad("present (exactly 2 arguments)")
-        if (!exprs(1).foldable)
-          throw bad("a foldable array<struct<piece,logp>> literal")
-        val v = exprs(1).eval()
-        if (v == null) throw bad("non-null")
-        val arr = v.asInstanceOf[ArrayData]
-        val pieces = (0 until arr.numElements()).map { i =>
-          val row = arr.getStruct(i, 2)
-          (row.getUTF8String(0).toString, row.getDouble(1))
-        }
-        UnigramEncode(exprs.head, pieces)
-      }, "scala_udf")
-  }
-
-  /** Compiled-tokenizer column (see [[UnigramEncode]]); call [[register]]
-    * on the session first. */
+  /** Compiled-tokenizer column (see [[UnigramEncode]]). `pieces` becomes
+    * a FOLDABLE array<struct<piece string, logp double>> literal (the
+    * frozen fitted table — a plan-time constant). */
   def unigramEncode(text: Column, pieces: Seq[(String, Double)]): Column = {
     val lit = org.apache.spark.sql.functions.typedlit(pieces.map {
       case (p, lp) => UnigramPieceRow(p, lp) })
@@ -177,5 +152,6 @@ object UnigramExpressions {
 
 /** Struct shape of one piece row in the
   * [[UnigramExpressions.unigramEncode]] literal: field order
-  * (piece, logp) is the wire contract the registration parses. */
+  * (piece, logp) is the wire contract the builder in [[NativeFunctions]]
+  * parses. */
 case class UnigramPieceRow(piece: String, logp: Double)

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
@@ -517,71 +517,6 @@ object UrlExpressions {
   val RegDomFnName = "url_registered_domain"
   val CanonFnName = "url_canon_parts"
 
-  /** Idempotently register the URL-normalization kernels. */
-  def register(spark: SparkSession): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    def bad(fn: String) = new org.apache.spark.sql.AnalysisException(
-      "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-        s"$fn(s): exactly 1 argument required"))
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      exprs => {
-        if (exprs.length != 1) throw bad(FnName)
-        UrlPctNormalize(exprs.head)
-      }, "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      DotFnName,
-      exprs => {
-        if (exprs.length != 1) throw bad(DotFnName)
-        UrlRemoveDotSegments(exprs.head)
-      }, "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      IdnFnName,
-      exprs => {
-        if (exprs.length != 1) throw bad(IdnFnName)
-        UrlIdnFold(exprs.head)
-      }, "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      RegDomFnName,
-      exprs => {
-        def badR(what: String) =
-          new org.apache.spark.sql.AnalysisException(
-            "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-              (s"$RegDomFnName(host, suffixes, wildcards, exceptions): " +
-                what)))
-        if (exprs.length != 4) throw badR("exactly 4 arguments required")
-        def strs(e: Expression, name: String): Seq[String] = {
-          if (!e.foldable)
-            throw badR(s"$name must be a foldable array<string> literal")
-          val v = e.eval()
-          if (v == null) throw badR(s"$name must be non-null")
-          val arr = v.asInstanceOf[
-            org.apache.spark.sql.catalyst.util.ArrayData]
-          (0 until arr.numElements()).map(arr.getUTF8String(_).toString)
-        }
-        UrlRegisteredDomain(exprs.head, strs(exprs(1), "suffixes"),
-          strs(exprs(2), "wildcards"), strs(exprs(3), "exceptions"))
-      }, "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      CanonFnName,
-      exprs => {
-        def badC(what: String) =
-          new org.apache.spark.sql.AnalysisException(
-            "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-              s"$CanonFnName(url, trackingParams): $what"))
-        if (exprs.length != 2) throw badC("exactly 2 arguments required")
-        val t = exprs(1)
-        if (!t.foldable)
-          throw badC("trackingParams must be a foldable array<string>")
-        val v = t.eval()
-        if (v == null) throw badC("trackingParams must be non-null")
-        val arr =
-          v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-        UrlCanonParts(exprs.head,
-          (0 until arr.numElements()).map(arr.getUTF8String(_).toString))
-      }, "scala_udf")
-  }
-
   def pctNormalize(url: Column): Column = call_function(FnName, url)
 
   def removeDotSegments(path: Column): Column =
@@ -589,8 +524,7 @@ object UrlExpressions {
 
   def idnFold(host: Column): Column = call_function(IdnFnName, host)
 
-  /** Compiled registered-domain column (see [[UrlRegisteredDomain]]);
-    * call [[register]] on the session first. */
+  /** Compiled registered-domain column (see [[UrlRegisteredDomain]]). */
   def registeredDomain(host: Column, suffixes: Seq[String],
       wildcards: Seq[String], exceptions: Seq[String]): Column = {
     import org.apache.spark.sql.functions.typedlit
@@ -599,8 +533,7 @@ object UrlExpressions {
   }
 
   /** Compiled canonicalization struct
-    * `(url_canon, host, n_params_dropped)` (see [[UrlCanonParts]]);
-    * call [[register]] on the session first. */
+    * `(url_canon, host, n_params_dropped)` (see [[UrlCanonParts]]). */
   def canonParts(url: Column, tracking: Seq[String]): Column = {
     import org.apache.spark.sql.functions.typedlit
     call_function(CanonFnName, url, typedlit(tracking))

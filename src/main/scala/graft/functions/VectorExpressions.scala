@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuaternaryExpression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -621,8 +621,6 @@ case class PqEncode(vec: Expression, m: Int, sub: Int,
 object VectorExpressions {
   val FnName = "float_vector_dot"
 
-  /** Idempotently register the expression in this session's function
-    * registry (temp function — visible to DataFrame and SQL callers). */
   val SQ8EncodeFn = "sq8_encode"
   val SQ8DotFn = "sq8_recon_dot"
   val SQ8ErrFn = "sq8_max_abs_err"
@@ -633,81 +631,7 @@ object VectorExpressions {
   val PQCodeDotFn = "pq_code_dot"
   val PqEncodeFn = "graft_pq_encode"
 
-  def register(spark: SparkSession): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => FloatVectorDot(exprs.head, exprs(1)), "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      PqEncodeFn, exprs => {
-        import org.apache.spark.sql.catalyst.util.ArrayData
-        PqEncode(exprs.head,
-          exprs(1).eval().asInstanceOf[Int],
-          exprs(2).eval().asInstanceOf[Int],
-          exprs(3).eval().asInstanceOf[ArrayData].toIntArray().toSeq,
-          exprs(4).eval().asInstanceOf[ArrayData].toDoubleArray().toSeq)
-      }, "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      SQ8EncodeFn, exprs => SQ8Encode(exprs.head, exprs(1), exprs(2)),
-      "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      SQ8DotFn, exprs => SQ8ReconDot(exprs.head, exprs(1), exprs(2), exprs(3)),
-      "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      SQ8ErrFn,
-      exprs => SQ8MaxAbsErr(exprs.head, exprs(1), exprs(2), exprs(3)),
-      "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      PQDistFn,
-      exprs => {
-        // subspace width is folded into generated code — literal required
-        // (the HashExpressions guard convention)
-        def bad(what: String) = new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-            s"$PQDistFn(query, recon, sub): sub argument must be $what"))
-        if (exprs.length != 3) throw bad("present (exactly 3 arguments)")
-        if (!exprs(2).foldable) throw bad("a foldable integer literal")
-        val s = exprs(2).eval()
-        if (s == null) throw bad("non-null")
-        if (!s.isInstanceOf[Number]) throw bad("an integer")
-        PQAdcDist(exprs.head, exprs(1), s.asInstanceOf[Number].intValue())
-      }, "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      PQLutFn,
-      exprs => {
-        def bad(what: String) = new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-            s"$PQLutFn(lut, codes, m): m argument must be $what"))
-        if (exprs.length != 3) throw bad("present (exactly 3 arguments)")
-        if (!exprs(2).foldable) throw bad("a foldable integer literal")
-        val mv = exprs(2).eval()
-        if (mv == null) throw bad("non-null")
-        if (!mv.isInstanceOf[Number]) throw bad("an integer")
-        PQLutDist(exprs.head, exprs(1), mv.asInstanceOf[Number].intValue())
-      }, "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      PackFn, exprs => CodesPack(exprs.head), "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      UnpackFn, exprs => CodesUnpack(exprs.head), "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      PQCodeDotFn,
-      exprs => {
-        def bad(what: String) = new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-            s"$PQCodeDotFn(table, a, b, m, k): m/k arguments must be $what"))
-        if (exprs.length != 5) throw bad("present (exactly 5 arguments)")
-        val mk = exprs.drop(3).map { e =>
-          if (!e.foldable) throw bad("foldable integer literals")
-          val v = e.eval()
-          if (v == null) throw bad("non-null")
-          if (!v.isInstanceOf[Number]) throw bad("integers")
-          v.asInstanceOf[Number].intValue()
-        }
-        PQCodeDot(exprs.head, exprs(1), exprs(2), mk(0), mk(1))
-      }, "scala_udf")
-  }
-
-  /** Codegen'd dot product of two `array<float>` columns (see class doc).
-    * Requires [[register]] to have been called on the session. */
+  /** Codegen'd dot product of two `array<float>` columns (see class doc). */
   def floatDot(a: Column, b: Column): Column = call_function(FnName, a, b)
 
   /** SQ8 code vector of a float embedding (see [[SQ8Encode]]). */

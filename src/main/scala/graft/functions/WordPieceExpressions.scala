@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -143,34 +143,10 @@ case class WordPieceEncode(child: Expression, vocab: Seq[String])
 object WordPieceExpressions {
   val FnName = "wordpiece_encode"
 
-  /** Idempotently register `wordpiece_encode(text, vocab)` where `vocab`
-    * is a FOLDABLE array<string> literal (the frozen vocabulary —
+  /** Compiled-tokenizer column (see [[WordPieceEncode]]). `vocab`
+    * becomes a FOLDABLE array<string> literal (the frozen vocabulary —
     * tokenizers are fitted once, the table is a plan-time constant). */
-  def register(spark: SparkSession): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      exprs => {
-        def bad(what: String) = new org.apache.spark.sql.AnalysisException(
-          "USER_RAISED_EXCEPTION", Map("errorMessage" ->
-            s"$FnName(text, vocab): vocab argument must be $what"))
-        if (exprs.length != 2) throw bad("present (exactly 2 arguments)")
-        if (!exprs(1).foldable) throw bad("a foldable array<string> literal")
-        val v = exprs(1).eval()
-        if (v == null) throw bad("non-null")
-        val arr = v.asInstanceOf[ArrayData]
-        val vocab = (0 until arr.numElements())
-          .map(i => arr.getUTF8String(i).toString)
-        WordPieceEncode(exprs.head, vocab)
-      }, "scala_udf")
-  }
-
-  /** Compiled-tokenizer column (see [[WordPieceEncode]]); registers on
-    * the session idempotently. */
-  def wordPieceEncode(spark: SparkSession, text: Column,
-      vocab: Seq[String]): Column = {
-    register(spark)
+  def wordPieceEncode(text: Column, vocab: Seq[String]): Column =
     call_function(FnName, text,
       org.apache.spark.sql.functions.typedlit(vocab))
-  }
 }

@@ -43,7 +43,6 @@ object AuditOps {
   def snapshotDiff(before: DataFrame, after: DataFrame, key: Column,
       content: Seq[Column], keyName: String = "key"): DataFrame = {
     val hashes = graft.functions.HashExpressions
-    hashes.register(before.sparkSession)
     def side(df: DataFrame, n: String) = df.select(key.as(keyName),
       hashes.polyHash(contentHash(content)).as(s"${n}_hash"))
     side(before, "before").join(side(after, "after"), Seq(keyName), "full_outer")
@@ -71,7 +70,6 @@ object AuditOps {
   def snapshotHashIndex(snapshot: DataFrame, key: Column,
       content: Seq[Column], keyName: String = "key"): DataFrame = {
     val hashes = graft.functions.HashExpressions
-    hashes.register(snapshot.sparkSession)
     snapshot.select(key.as(keyName),
       hashes.polyHash(contentHash(content)).as("snapshot_hash"))
   }
@@ -133,7 +131,6 @@ object AuditOps {
   def snapshotDeltaAudit(delta: DataFrame, snapshotIndex: DataFrame,
       key: Column, content: Seq[Column], keyName: String = "key"): DataFrame = {
     val hashes = graft.functions.HashExpressions
-    hashes.register(delta.sparkSession)
     delta.select(key.as(keyName),
         hashes.polyHash(contentHash(content)).as("delta_hash"))
       .join(snapshotIndex.select(col(keyName), col("snapshot_hash")),

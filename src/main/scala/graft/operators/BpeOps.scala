@@ -331,7 +331,6 @@ object BpeOps {
     * MicroBench bpe_apply_* rows measure the chain's blow-up vs this). */
   def bpeTokensCompiled(spark: org.apache.spark.sql.SparkSession,
       text: Column, merges: Seq[(String, String)]): Column = {
-    graft.functions.BpeExpressions.register(spark)
     graft.functions.BpeExpressions.bpeEncode(text, merges)
   }
 
@@ -458,25 +457,9 @@ object BpeOps {
     * Column form as the oracle-mirrored executable reference
     * ([[gptPreTokensSql]] is ITS verbatim SQL twin), and BpeSpec pins
     * kernel ≡ reference on the GPT-2 fixtures, randomized strings,
-    * and the corpus. Call sites need no registration call — this
-    * registers the kernel on the input's session via the expression
-    * registry (idempotent). */
-  def gptPreTokenize(text: Column): Column = {
-    // Fail FAST when no session is active (r17 advice): a silent skip
-    // here would surface later as an opaque 'undefined function
-    // gpt_pre_tokenize' at analysis time, and in multi-session apps
-    // could register on the wrong session. DataFrame-bearing call
-    // sites (gptByteBpeTokenize, preTokenFreqs' callers) register on
-    // the input frame's own session explicitly.
-    val spark = org.apache.spark.sql.SparkSession.getActiveSession
-      .getOrElse(throw new IllegalStateException(
-        "BpeOps.gptPreTokenize: no active SparkSession on this thread — " +
-          "call graft.functions.BpeExpressions.register(session) on the " +
-          "DataFrame's session first, or invoke from a thread with an " +
-          "active session"))
-    graft.functions.BpeExpressions.register(spark)
+    * and the corpus. */
+  def gptPreTokenize(text: Column): Column =
     graft.functions.BpeExpressions.gptPreTokens(text)
-  }
 
   /** The two-pass Column REFERENCE form of [[gptPreTokenize]] — mark
     * the `\s+(?!\S)` boundaries ([[GptWsSplitPattern]]), split,
@@ -544,7 +527,6 @@ object BpeOps {
     * identity than the whitespace-word faces. */
   def gptByteBpeTokenize(docs: DataFrame, id: Column, text: Column,
       merges: DataFrame): DataFrame = {
-    graft.functions.BpeExpressions.register(docs.sparkSession)
     val m = merges.orderBy("rank").select("left", "right").collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
     val toks = graft.functions.BpeExpressions.gptByteBpe(text, m)
@@ -583,7 +565,6 @@ object BpeOps {
     * merge table. */
   def gptByteBpeTokenizeIds(docs: DataFrame, id: Column, text: Column,
       merges: DataFrame): DataFrame = {
-    graft.functions.BpeExpressions.register(docs.sparkSession)
     val m = merges.orderBy("rank").select("left", "right").collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
     val vocab = gptVocab(merges).orderBy("id")
@@ -610,7 +591,6 @@ object BpeOps {
       text: Column, merges: DataFrame,
       specials: Seq[String]): DataFrame = {
     require(specials.forall(_.nonEmpty), "specials must be non-empty")
-    graft.functions.BpeExpressions.register(docs.sparkSession)
     val m = merges.orderBy("rank").select("left", "right").collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
     val toks = graft.functions.BpeExpressions.gptByteBpe(text, m, specials)
@@ -626,7 +606,6 @@ object BpeOps {
     * kernel is the path a 100 TB corpus walks). */
   def gptByteBpeTokenizeStaged(docs: DataFrame, id: Column, text: Column,
       merges: DataFrame): DataFrame = {
-    graft.functions.BpeExpressions.register(docs.sparkSession)
     val m = merges.orderBy("rank").select("left", "right").collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
     val toks = flatten(transform(gptPreTokenize(text),
@@ -642,7 +621,6 @@ object BpeOps {
     * `unhex` — no UNK exists by construction. */
   def byteBpeTokenize(docs: DataFrame, id: Column, text: Column,
       merges: DataFrame): DataFrame = {
-    graft.functions.BpeExpressions.register(docs.sparkSession)
     val m = merges.orderBy("rank").select("left", "right").collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
     val toks = graft.functions.BpeExpressions.byteBpeEncode(text, m)
@@ -658,7 +636,6 @@ object BpeOps {
     * compression rate. */
   def byteTokenizerFertility(docs: DataFrame, id: Column, text: Column,
       group: Column, merges: DataFrame): DataFrame = {
-    graft.functions.BpeExpressions.register(docs.sparkSession)
     val m = merges.orderBy("rank").select("left", "right").collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
     val toks = graft.functions.BpeExpressions.byteBpeEncode(text, m)

@@ -275,7 +275,6 @@ object CorpusStatsOps {
     * frames. */
   def datasheet(docs: DataFrame, id: Column, text: Column,
       lang: Column, source: Column): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     import graft.functions.Exact.round6z
     val base = docs.select(id.as("did"), text.as("t"),
       lang.as("lg"), source.as("src"),
@@ -416,7 +415,6 @@ object CorpusStatsOps {
     * plain-Scala reference instead. */
   def compressionScreen(docs: DataFrame, id: Column, text: Column,
       lo: Double = 0.2, hi: Double = 1.1): DataFrame = {
-    graft.functions.CompressExpressions.register(docs.sparkSession)
     val ratio = graft.functions.CompressExpressions.deflateRatio(text)
     docs.select(id.as("did"),
       length(text).cast("long").as("n_chars"),
@@ -465,7 +463,6 @@ object CorpusStatsOps {
   def heavyNgrams(docs: DataFrame, id: Column, text: Column, n: Int = 3,
       rate: Int = 8, minCount: Long = 16L, k: Int = 20): DataFrame = {
     require(rate >= 1 && k >= 1 && minCount >= 1)
-    graft.functions.HashExpressions.register(docs.sparkSession)
     import graft.functions.HashExpressions.polyHash
     import org.apache.spark.sql.expressions.Window
     // Both passes (sample-count and exact verify) re-run the per-doc

@@ -44,7 +44,6 @@ object DedupOps {
   val ShingleChunk: Int = 4096
 
   def shingleHashesRaw(docs: DataFrame, id: Column, text: Column, w: Int): DataFrame = {
-    HashExpressions.register(docs.sparkSession)
     // Giant-ROW skew defense (no fan-out — see the cost-gate note at
     // the bottom):
     //  1. One enormous document (q70's corpus-sized
@@ -134,7 +133,6 @@ object DedupOps {
     * across tasks instead of pinning each doc's whole array to one row. */
   def minhashSignaturesLocal(docs: DataFrame, id: Column, text: Column,
       w: Int, keep: Seq[Column] = Nil): DataFrame = {
-    HashExpressions.register(docs.sparkSession)
     val hs = HashExpressions.shingleHashes(text, w)
     val mins = (0 until MinhashA.size).map(i =>
       array_min(transform(hs, h => minhashPerm(h, i))).as(s"m$i"))
@@ -569,7 +567,6 @@ object DedupOps {
     // measured (DECISIONS.md) — a DISK_ONLY persist of the postings wins
     // 2.3 s vs 4.5 s at sf0.1 but is a wash at 10× docs (17.2 vs 17.4 s),
     // so the declarative recompute stays (no cache lifecycle in the plan).
-    HashExpressions.register(docs.sparkSession)
     val cands = lshCandidatePairs(minhashSignatures(docs, id, text, w))
     val sh = shingleHashes(docs, id, text, w)
     val arrs = sh.groupBy(col("doc_id"))
@@ -638,7 +635,6 @@ object DedupOps {
     // size(array_intersect(...)), whose per-evaluation hash set + output
     // array made the verify the query's dominant allocator — GC-pause
     // variance at millions of candidates (the q70 rep-spread class).
-    HashExpressions.register(sh.sparkSession)
     val arrs = sh.groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("h"))).as("hs"),
         count(lit(1)).as("n"))
@@ -894,7 +890,6 @@ object DedupOps {
     require(minSupport >= 1, s"minSupport must be >= 1, got $minSupport")
     require(k >= 1, s"sketch size k must be >= 1, got $k")
     require(maxDf > 0, s"maxDf must be positive, got $maxDf")
-    HashExpressions.register(docs.sparkSession)
     val shAll = shingleHashes(docs, id, text, w)
     val hot = shAll.groupBy(col("h")).agg(count(lit(1)).as("df"))
       .where(col("df") > maxDf)
@@ -1040,7 +1035,6 @@ object DedupOps {
       bits: Int = 16): DataFrame = {
     require(bits >= 4 && bits <= 28 && bits % 4 == 0,
       "bits must be a multiple of 4 in [4, 28] (4 equal bands, 31-bit hash)")
-    HashExpressions.register(docs.sparkSession)
     val words = docs
       .select(id.as("doc_id"), explode(split(text, " ")).as("w"))
       .distinct()
@@ -1093,7 +1087,6 @@ object DedupOps {
     * changes. */
   def takedownIndex(docs: DataFrame, deleteIds: DataFrame, id: Column,
       text: Column, w: Int): DataFrame = {
-    HashExpressions.register(docs.sparkSession)
     val listed = docs.select(id.as("doc_id"), text.as("text"))
       .join(broadcast(deleteIds.select(col("doc_id"))), "doc_id")
     val arrs = shingleHashes(listed, col("doc_id"), col("text"), w)
@@ -1108,7 +1101,6 @@ object DedupOps {
 
   def takedownPropagation(docs: DataFrame, deleteIds: DataFrame, id: Column,
       text: Column, w: Int, threshold: Double): DataFrame = {
-    HashExpressions.register(docs.sparkSession)
     val base = docs.select(id.as("doc_id"), text.as("text"))
     val del = deleteIds.select(col("doc_id"))
     val listed = base.join(broadcast(del), "doc_id")

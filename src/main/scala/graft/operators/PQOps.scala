@@ -121,7 +121,6 @@ object PQOps {
     * `(query_id, rk, neighbor_id, adc_dist)`. */
   def pqTopK(index: DataFrame, queries: DataFrame, id: Column, vec: Column,
       k: Int, sub: Int): DataFrame = {
-    VectorExpressions.register(queries.sparkSession)
     val q = queries.select(id.as("qid"), vec.as("qe"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("adc_dist"), col("vec_id"))
@@ -153,7 +152,6 @@ object PQOps {
     * the offending ids. */
   def pqTopKLut(index: DataFrame, queries: DataFrame, codebook: DataFrame,
       id: Column, vec: Column, k: Int, m: Int, sub: Int): DataFrame = {
-    VectorExpressions.register(queries.sparkSession)
     val cb = codebook.select(id.cast("int").as("cid"), vec.as("ce"))
     val cids = cb.select(col("cid")).collect().map(_.getInt(0)).sorted
     require(cids.nonEmpty && cids.head == 0 &&
@@ -234,8 +232,6 @@ object PQOps {
     // degenerate null/short-vector rule — as ONE compiled loop; PQSpec
     // pins exact equality against the relational window-argmin form, and
     // the q94-q109 oracles replay that form in SQL.
-    graft.functions.VectorExpressions.register(
-      org.apache.spark.sql.SparkSession.active)
     val flat = cents.flatMap { case (_, ce) =>
       ce.take(m * sub).map(_.toDouble) }
     val enc = graft.functions.VectorExpressions.pqEncode(
@@ -255,7 +251,6 @@ object PQOps {
     * `(query_id, rk, neighbor_id, l2_dist)`. */
   def pqRerankTopK(shortlist: DataFrame, emb: DataFrame, queries: DataFrame,
       id: Column, vec: Column, k: Int): DataFrame = {
-    VectorExpressions.register(emb.sparkSession)
     def selfDot(n: String) = VectorExpressions.floatDot(
       col(s"${n}_e"), col(s"${n}_e"))
     val q = queries.select(id.as("qid"), vec.as("q_e"))
@@ -312,7 +307,6 @@ object PQOps {
   def ivfPqTopKIndexed(idx: DataFrame, queries: DataFrame,
       cells: DataFrame, id: Column, vec: Column, k: Int, nProbe: Int,
       sub: Int): DataFrame = {
-    VectorExpressions.register(queries.sparkSession)
     // query-side probe list: top-nProbe cells by the same rounded cosine
     // and tie-break as assignCells (nProbe=1 degenerates to it)
     val cents = cells.select(id.as("cid"), vec.as("ce"),
@@ -355,7 +349,6 @@ object PQOps {
     * `(vec_id, cell, res: array<float>)`. */
   def cellResiduals(emb: DataFrame, cells: DataFrame, id: Column,
       vec: Column): DataFrame = {
-    VectorExpressions.register(emb.sparkSession)
     val rows = cells.select(id.cast("long").as("cid"), vec.as("ce"))
       .collect()
     require(rows.nonEmpty, "cell centroid set must be non-empty")
@@ -421,7 +414,6 @@ object PQOps {
   def ivfPqResidualTopKIndexed(idx: DataFrame, queries: DataFrame,
       cells: DataFrame, id: Column, vec: Column,
       k: Int, nProbe: Int, sub: Int): DataFrame = {
-    VectorExpressions.register(queries.sparkSession)
     val cents = cells.select(id.as("cid"), vec.as("ce"),
       sqrt(VectorExpressions.floatDot(vec, vec)).as("cnrm"))
     val qn = queries.select(id.as("qid"), vec.as("qe"),
@@ -488,7 +480,6 @@ object PQOps {
     * as its static side. */
   def pqCellIndex(emb: DataFrame, cells: DataFrame, codebook: DataFrame,
       id: Column, vec: Column, m: Int, sub: Int): DataFrame = {
-    VectorExpressions.register(emb.sparkSession)
     val cellRows = cells.select(id.cast("long").as("cid"), vec.as("ce"))
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1).toSeq
@@ -522,7 +513,6 @@ object PQOps {
   def pqSemanticScreen(delta: DataFrame, corpusIdx: DataFrame,
       cells: DataFrame, codebook: DataFrame, id: Column, vec: Column,
       threshold: Double, m: Int, sub: Int): DataFrame = {
-    VectorExpressions.register(delta.sparkSession)
     val cellRows = cells.select(id.cast("long").as("cid"), vec.as("ce"))
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1).toSeq
@@ -628,7 +618,6 @@ object PQOps {
       codebook: DataFrame, id: Column, vec: Column, m: Int, sub: Int,
       refitRatio: Double = 1.5): DataFrame = {
     require(refitRatio > 0, s"refitRatio must be positive, got $refitRatio")
-    VectorExpressions.register(baseline.sparkSession)
     val rows = codebook.select(id.cast("int").as("cid"), vec.as("ce"))
       .collect()
     require(rows.nonEmpty, "codebook must be non-empty")

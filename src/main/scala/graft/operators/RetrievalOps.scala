@@ -284,7 +284,6 @@ object RetrievalOps {
       emb: DataFrame, vecId: Column, vec: Column,
       k: Int, posThreshold: Double, nNeg: Int): DataFrame = {
     require(nNeg >= 1 && k >= nNeg, s"need k >= nNeg >= 1, got $k/$nNeg")
-    VectorExpressions.register(docs.sparkSession)
     // r19: cand feeds THREE consumers (two broadcast embedding probes
     // and the cosine attach) — materialized (localCheckpoint; it is a
     // queries x k-row artifact), the bm25 ranking's final window runs

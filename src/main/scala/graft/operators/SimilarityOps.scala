@@ -28,11 +28,9 @@ import graft.functions.VectorExpressions
   */
 object SimilarityOps {
 
-  /** Project (id, vector, precomputed norm); registers the native dot
-    * expression on the session. */
+  /** Project (id, vector, precomputed norm). */
   private def withNorm(df: DataFrame, id: Column, vec: Column,
       idName: String): DataFrame = {
-    VectorExpressions.register(df.sparkSession)
     df.select(id.as(idName), vec.as(s"${idName}_e"),
       sqrt(VectorExpressions.floatDot(vec, vec)).as(s"${idName}_nrm"))
   }
@@ -138,7 +136,6 @@ object SimilarityOps {
     * `df` (e.g. an event-time) that ride along. */
   def bandedProjection(df: DataFrame, id: Column, vec: Column, n: String,
       nBits: Int, tables: Int, keep: Seq[String] = Nil): DataFrame = {
-    VectorExpressions.register(df.sparkSession)
     df.select(Seq(id.as(n), vec.as(s"${n}_e"),
         sqrt(VectorExpressions.floatDot(vec, vec)).as(s"${n}_nrm")) ++
         keep.map(col): _*)
@@ -289,7 +286,6 @@ object SimilarityOps {
     // guard exists for them) but Spark ML's cosine k-means REQUIRES
     // strictly positive norms — exclude them from the fit; they still get
     // a cell at assignment time (NULL c_sim ranks last deterministically).
-    VectorExpressions.register(emb.sparkSession)
     val feats = emb
       .where(VectorExpressions.floatDot(vec, vec) > 0)
       .select(array_to_vector(vec).as("features"))
@@ -318,7 +314,6 @@ object SimilarityOps {
     * rounded to 1e-6, below which double-sum order effects live. */
   def labelStats(emb: DataFrame, label: Column, vec: Column,
       dim: Int): DataFrame = {
-    VectorExpressions.register(emb.sparkSession)
     val v = emb.select(label.as("label"), vec.as("e"),
       sqrt(VectorExpressions.floatDot(vec, vec)).as("nrm"))
     def dot(a: Column => Column, b: Column => Column): Column =
@@ -598,7 +593,6 @@ object SimilarityOps {
     * no shuffle). */
   def sq8Quantize(emb: DataFrame, stats: DataFrame, id: Column,
       vec: Column): DataFrame = {
-    VectorExpressions.register(emb.sparkSession)
     // per-vector encode is row-local and heavy; spread a tiny
     // single-split scan first (no-op at scale)
     Fanout.spread(emb).crossJoin(broadcast(stats))
@@ -617,7 +611,6 @@ object SimilarityOps {
     * dimension (SQ8Spec pins the bound against [[sq8Stats]]). */
   def sq8Digest(emb: DataFrame, id: Column, vec: Column,
       dim: Int): DataFrame = {
-    VectorExpressions.register(emb.sparkSession)
     val q = emb.crossJoin(broadcast(sq8Stats(emb, vec, dim)))
       .select(id.as("vec_id"), vec.as("_e"), col("mins"), col("scales"),
         VectorExpressions.sq8Encode(vec, col("mins"), col("scales"))
@@ -752,7 +745,6 @@ object SimilarityOps {
       vec: Column, alpha: Double, budget: Long): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0,1], got $alpha")
     require(budget > 0, s"budget must be positive, got $budget")
-    VectorExpressions.register(emb.sparkSession)
     val cents = centroids.select(col("vec_id"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1).toSeq
     val assigned = emb.select(id.as("vec_id"),
@@ -808,7 +800,6 @@ object SimilarityOps {
   def jlProject(emb: DataFrame, id: Column, vec: Column,
       dim: Int, k: Int): DataFrame = {
     require(k >= 1 && k <= dim, s"need 1 <= k <= dim, got k=$k dim=$dim")
-    VectorExpressions.register(emb.sparkSession)
     val signs = jlSigns(dim, k)
     emb.select(id.as("vec_id") +:
       (0 until k).map { j =>

@@ -50,7 +50,6 @@ object SpanDedupOps {
     * Jaccard verify bound, never a drop. */
   private[operators] def gramTable(docs: DataFrame, id: Column,
       text: Column, k: Int): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     // one codegen'd scan per doc emits (h, glen) pairs directly — the
     // compositional form (transform + concat_ws + polyHash + length)
     // built every gram STRING twice per position, measured +45-60% on

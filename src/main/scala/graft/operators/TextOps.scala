@@ -139,7 +139,6 @@ object TextOps {
   def hashSplit(docs: DataFrame, id: Column, text: Column,
       trainPct: Int = 80, valPct: Int = 10,
       keep: Seq[Column] = Nil): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     val bucket = pmod(graft.functions.HashExpressions.polyHash(text), lit(100))
     docs.select(
       id.as("doc_id") +:
@@ -170,7 +169,6 @@ object TextOps {
     * sizes; AQE broadcasts the cluster side when it is small. */
   def leakageSafeSplit(docs: DataFrame, id: Column, text: Column,
       clusters: DataFrame, trainPct: Int = 80, valPct: Int = 10): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     val base = docs.select(id.as("doc_id"),
       graft.functions.HashExpressions.polyHash(text).as("own_hash"))
     val grouped = base
@@ -219,7 +217,6 @@ object TextOps {
   def clusterSplitIndex(docs: DataFrame, id: Column, text: Column,
       clusters: DataFrame, w: Int,
       maxBucket: Int = DedupOps.MaxBucket): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     val base = docs.select(id.as("doc_id"),
       graft.functions.HashExpressions.polyHash(text).as("own_hash"))
     val grouped = base
@@ -281,7 +278,6 @@ object TextOps {
     * per n-value), zero shuffle; signal conventions and rounding are
     * documented on the kernel and replayed by the q126 oracle. */
   def gopherRepetition(docs: DataFrame, id: Column, text: Column): DataFrame = {
-    graft.functions.RepetitionExpressions.register(docs.sparkSession)
     docs.select(id.as("doc_id"),
         graft.functions.RepetitionExpressions.repetitionSignals(text).as("_r"))
       .select(col("doc_id"), col("_r.*"))
@@ -382,7 +378,6 @@ object TextOps {
   def stratifiedSample(docs: DataFrame, id: Column, text: Column,
       strata: Column, fractions: Map[String, Double],
       keep: Seq[Column] = Nil): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     require(fractions.values.forall(f => f >= 0 && f <= 1),
       "fractions must be in [0, 1]")
     val bucket = sampleBucket(
@@ -413,7 +408,6 @@ object TextOps {
 
   /** Whole-document rolling-hash fingerprint (exact-dup key). */
   def fingerprint(docs: DataFrame, id: Column, text: Column): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     docs.select(id.as("doc_id"),
       graft.functions.HashExpressions.polyHash(text).as("fingerprint"))
   }
@@ -729,8 +723,6 @@ object TextOps {
       minOverlap: Int = 1, trainPct: Int = 80, valPct: Int = 10,
       bloomBitsPerItem: Int = 8,
       estimatedTestShingles: Long = 1L << 22): DataFrame = {
-    val hashes = graft.functions.HashExpressions
-    hashes.register(docs.sparkSession)
     val withSplit = splitShingleFrame(docs, id, text, w, trainPct, valPct)
     val testH = withSplit.where(col("split") === "test")
       .select(explode(col("hs")).as("h")).distinct()
@@ -740,7 +732,6 @@ object TextOps {
     val pruned =
       if (bloomBitsPerItem <= 0) train
       else {
-        graft.functions.BloomFunctions.register(docs.sparkSession)
         // The test-side pipeline deliberately runs twice (build job +
         // verify join) rather than being persisted: it is the SMALL side
         // by construction, and caching it measured slower and noisier
@@ -825,7 +816,6 @@ object TextOps {
   def contaminationReport(docs: DataFrame, id: Column, text: Column,
       w: Int, minOverlap: Int = 2, trainPct: Int = 80, valPct: Int = 10,
       maxDf: Int = 64): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     val withSplit = splitShingleFrame(docs, id, text, w, trainPct, valPct)
     val test = withSplit.where(col("split") === "test")
       .select(col("doc_id").as("test_id"),
@@ -894,7 +884,6 @@ object TextOps {
   def shuffleShards(docs: DataFrame, id: Column, text: Column,
       nShards: Int): DataFrame = {
     val hashes = graft.functions.HashExpressions
-    hashes.register(docs.sparkSession)
     val P = graft.functions.TextHash.P
     val mixed = pmod(hashes.polyHash(text) * lit(31L) + id, lit(P))
     val orderKey = pmod(mixed * lit(2654435761L), lit(P))
@@ -917,7 +906,6 @@ object TextOps {
   def shardManifest(docs: DataFrame, id: Column, text: Column,
       nShards: Int): DataFrame = {
     val hashes = graft.functions.HashExpressions
-    hashes.register(docs.sparkSession)
     val meta = docs.select(id.as("doc_id"),
       size(split(text, " ")).cast("long").as("_toks"),
       hashes.polyHash(text).as("_h"))
@@ -963,7 +951,6 @@ object TextOps {
   def interleavedOrder(docs: DataFrame, id: Column, text: Column,
       source: Column, maxExprSources: Int = 64): DataFrame = {
     val hashes = graft.functions.HashExpressions
-    hashes.register(docs.sparkSession)
     val mixed = pmod(hashes.polyHash(text) * lit(31L) + id, lit(P))
     val draw = pmod(mixed * lit(2654435761L), lit(P))
     val base = docs.select(id.as("doc_id"), source.as("source"),
@@ -1043,7 +1030,6 @@ object TextOps {
   def repeatedShingleSet(docs: DataFrame, id: Column, text: Column,
       w: Int): DataFrame = {
     val hashes = graft.functions.HashExpressions
-    hashes.register(docs.sparkSession)
     docs.select(id.as("doc_id"),
         explode(hashes.shingleHashes(text, w)).as("h"))
       .groupBy("h").agg(count(lit(1)).as("_c"))
@@ -1055,7 +1041,6 @@ object TextOps {
   private def removeSpansAgainst(docs: DataFrame, id: Column, text: Column,
       w: Int, minSpanTokens: Int, dupH: DataFrame): DataFrame = {
     val hashes = graft.functions.HashExpressions
-    hashes.register(docs.sparkSession)
     val posSh = docs.select(id.as("doc_id"),
         posexplode(hashes.shingleHashes(text, w)).as(Seq("_p0", "h")))
       .select(col("doc_id"), (col("_p0") + 1).cast("long").as("i"), col("h"))
@@ -1205,7 +1190,6 @@ object TextOps {
     * Tokens are the [[tokenCounts]] BPE estimate (ceil(chars/4)). */
   def corpusMix(docs: DataFrame, id: Column, text: Column, source: Column,
       weights: Map[String, Long], budget: Long): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     val base = docs.select(id.as("doc_id"), source.as("source"),
       ceil(length(text).cast("double") / 4.0).cast("long").as("toks"),
       sampleBucket(graft.functions.HashExpressions.polyHash(text), 1000000)
@@ -1279,7 +1263,6 @@ object TextOps {
   private[graft] def applyTemperatureRates(base: DataFrame,
       rates: DataFrame): DataFrame = {
     val hashes = graft.functions.HashExpressions
-    hashes.register(base.sparkSession)
     val P = graft.functions.TextHash.P
     // The [[shuffleShards]] draw: polyHash is a rolling hash, NOT
     // avalanched — texts differing in a trailing digit give nearby
@@ -1307,7 +1290,6 @@ object TextOps {
     * cross-engine determinism contract). */
   def mixThresholds(docs: DataFrame, id: Column, text: Column, source: Column,
       weights: Map[String, Long], budget: Long): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     require(weights.values.forall(w => w > 0 &&
       w * budget < Long.MaxValue / 1000000L),
       "weights must be positive with weight*budget*1e6 inside Long")
@@ -1339,7 +1321,6 @@ object TextOps {
       chunkWords: Int, stride: Int): DataFrame = {
     require(chunkWords > 0 && stride > 0 && stride <= chunkWords,
       "need 0 < stride <= chunkWords (gaps would drop words)")
-    graft.functions.HashExpressions.register(docs.sparkSession)
     val base = docs.select(id.as("doc_id"), split(text, " ").as("_ws"))
       .withColumn("_n", size(col("_ws")).cast("long"))
     base
@@ -1515,7 +1496,6 @@ object TextOps {
     require(maskRate > 0.0 && maskRate < 1.0,
       s"maskRate must be in (0, 1), got $maskRate")
     require(meanSpan >= 1, s"meanSpan must be >= 1, got $meanSpan")
-    graft.functions.SpanExpressions.register(docs.sparkSession)
     val f = graft.functions.SpanExpressions.spanCorrupt(
       text, id.cast("long"), maskRate, meanSpan)
     docs.select(id.as("doc_id"), f.as("_s"))
@@ -1540,7 +1520,6 @@ object TextOps {
     require(maskRate > 0.0 && maskRate < 1.0,
       s"maskRate must be in (0, 1), got $maskRate")
     require(meanSpan >= 1, s"meanSpan must be >= 1, got $meanSpan")
-    graft.functions.HashExpressions.register(docs.sparkSession)
     val P = graft.functions.TextHash.P
     val maxL = 2 * meanSpan - 1
     val startThr = math.round(maskRate / meanSpan * 1e6)
@@ -1624,7 +1603,6 @@ object TextOps {
     * actual pair). */
   def prefixLmSplit(docs: DataFrame, id: Column, text: Column,
       keepText: Boolean = false): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     val P = graft.functions.TextHash.P
     val toks = filter(split(text, " "), w => length(w) > 0)
     val base = docs.select(id.as("doc_id"), toks.as("_toks"),
@@ -1664,7 +1642,6 @@ object TextOps {
     * applied, original when not); `keepText` adds the text itself. */
   def fimSplit(docs: DataFrame, id: Column, text: Column,
       keepText: Boolean = false): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     val P = graft.functions.TextHash.P
     val toks = filter(split(text, " "), w => length(w) > 0)
     val mix = pmod(pmod(graft.functions.HashExpressions.polyHash(text)
@@ -1720,7 +1697,6 @@ object TextOps {
     * pair). */
   def ictPairs(docs: DataFrame, id: Column, text: Column,
       keepText: Boolean = false): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     val P = graft.functions.TextHash.P
     val toks = filter(split(text, " "), w => length(w) > 0)
     val base = docs.select(id.as("doc_id"), toks.as("_toks"),
@@ -1769,7 +1745,6 @@ object TextOps {
 
   def normalizeText(docs: DataFrame, id: Column, text: Column,
       keepText: Boolean = false): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     val norm = lower(trim(regexp_replace(
       regexp_replace(text, ZeroWidthRe, ""), ControlWsRe, " ")))
     docs.select(
@@ -1792,7 +1767,6 @@ object TextOps {
     * cannot dodge the screen. */
   def blocklistScreen(docs: DataFrame, id: Column, text: Column,
       patterns: Seq[String]): DataFrame = {
-    graft.functions.AcExpressions.register(docs.sparkSession)
     docs.select(id.as("doc_id"),
         graft.functions.AcExpressions.acScreen(text, patterns).as("_b"))
       .select(col("doc_id"), col("_b.*"))
@@ -1841,7 +1815,6 @@ object TextOps {
   def blocklistRedact(docs: DataFrame, id: Column, text: Column,
       patterns: Seq[String], marker: String = "<BLOCKED>",
       keepText: Boolean = false): DataFrame = {
-    graft.functions.AcExpressions.registerRedact(docs.sparkSession)
     docs.select(id.as("doc_id"),
         graft.functions.AcExpressions.acRedact(text, patterns, marker)
           .as("_r"))
@@ -1867,7 +1840,6 @@ object TextOps {
     * fingerprint unchanged) without the cleartext leaving the row. */
   def piiRedact(docs: DataFrame, id: Column, text: Column,
       keepText: Boolean = false): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     def n(re: String) =
       size(regexp_extract_all(text, lit(re), lit(0))).cast("long")
     val red = Seq(EmailRe -> "<EMAIL>", PhoneRe -> "<PHONE>", UrlRe -> "<URL>")
@@ -1953,7 +1925,6 @@ object TextOps {
     * text-keyed anti-join where zero residue is required. */
   def lineDedup(docs: DataFrame, id: Column, text: Column,
       maxDf: Int): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     val lines = docs
       .select(id.as("doc_id"), posexplode(split(text, "\n")).as(Seq("pos", "line")))
       .withColumn("h", graft.functions.HashExpressions.polyHash(col("line")))
@@ -1983,7 +1954,6 @@ object TextOps {
   def boilerplateLineSet(docs: DataFrame, id: Column, text: Column,
       maxDf: Int): DataFrame = {
     require(maxDf >= 2, s"maxDf must be >= 2, got $maxDf")
-    graft.functions.HashExpressions.register(docs.sparkSession)
     docs
       .select(id.as("doc_id"), explode(split(text, "\n")).as("line"))
       .select(col("doc_id"),
@@ -2325,7 +2295,6 @@ object TextOps {
   private[graft] def noiseDraws(docs: DataFrame, noise: DataFrame, k: Int,
       buckets: Int): DataFrame = {
     require(k > 0, s"need k > 0, got $k")
-    graft.functions.HashExpressions.register(docs.sparkSession)
     val P = graft.functions.TextHash.P
     val h = graft.functions.HashExpressions.polyHash(col("_text"))
     val draws = docs.withColumn("_h", h)

@@ -30,10 +30,6 @@ object TokenizerAuditOps {
       byteMerges: Seq[(String, String)],
       wpVocab: Seq[String],
       uniPieces: Seq[(String, Double)]): DataFrame = {
-    val spark = docs.sparkSession
-    graft.functions.BpeExpressions.register(spark)
-    graft.functions.WordPieceExpressions.register(spark)
-    graft.functions.UnigramExpressions.register(spark)
     val words = filter(split(text, " "), w => length(w) > 0)
     // four tokenizer faces each re-run per-word encode/decode over the
     // corpus; spread a tiny single-split scan first (no-op at scale)
@@ -71,7 +67,7 @@ object TokenizerAuditOps {
     // (unless the word IS '[UNK]' — the honest corner)
     val wordpiece = face("wordpiece", { w =>
       val toks = graft.functions.WordPieceExpressions
-        .wordPieceEncode(spark, w, wpVocab)
+        .wordPieceEncode(w, wpVocab)
       concat(element_at(toks, 1),
         aggregate(slice(toks, lit(2), greatest(size(toks) - 1, lit(0))),
           lit(""),
@@ -107,9 +103,6 @@ object TokenizerAuditOps {
       gptMerges: Seq[(String, String)],
       uniPieces: Seq[(String, Double)],
       maxFertilityRatio: Double = 1.25): DataFrame = {
-    val spark = base.sparkSession
-    graft.functions.BpeExpressions.register(spark)
-    graft.functions.UnigramExpressions.register(spark)
     val words = filter(split(text, " "), w => length(w) > 0)
 
     def side(df: DataFrame, s: String, tokens: Column): DataFrame =

@@ -86,7 +86,6 @@ object UnigramOps {
     requireFitParams(vocabSize, seedSize, pruneFrac)
     val spark = docs.sparkSession
     import spark.implicits._
-    UnigramExpressions.register(spark)
     val hist = wordHistogram(docs, text).repartition(4).localCheckpoint(true)
     try {
       // driver-side table: (piece, cnt) — bounded by seedSize + charset
@@ -281,9 +280,6 @@ object UnigramOps {
     * sum of 1e-6-rounded piece logps, order-exact). */
   def unigramTokenize(docs: DataFrame, id: Column, text: Column,
       pieces: Seq[(String, Double)]): DataFrame = {
-    val spark = docs.sparkSession
-    UnigramExpressions.register(spark)
-    graft.functions.HashExpressions.register(spark)
     val lpMap = typedlit(pieces.map { case (p, lp) =>
       (p, math.rint(lp * 1e6) / 1e6) }.toMap)
     val enc = UnigramExpressions.unigramEncode(text, pieces)

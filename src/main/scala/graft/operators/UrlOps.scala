@@ -91,12 +91,11 @@ object UrlOps {
     (('A' to 'Z') ++ ('a' to 'z') ++ ('0' to '9')) ++ Seq('-', '.', '_', '~')
 
   /** Percent-encoding normalization — ONE codegen'd O(len) string pass
-    * ([[graft.functions.UrlPctNormalize]]; call sites must have run
-    * [[graft.functions.UrlExpressions.register]], which [[canonicalize]]
-    * does). A 78-step regexp_replace chain expressed the same rules but
-    * Catalyst tree duplication multiplied it into hundreds of regex
-    * executions per row (q181: 107 s at sf0.1 vs ~2 s) — the library's
-    * own "native expression beats a UDF beats a regex chain" rule. The
+    * ([[graft.functions.UrlPctNormalize]]). A 78-step regexp_replace
+    * chain expressed the same rules but Catalyst tree duplication
+    * multiplied it into hundreds of regex executions per row (q181:
+    * 107 s at sf0.1 vs ~2 s) — the library's own "native expression
+    * beats a UDF beats a regex chain" rule. The
     * DuckDB twin ([[pctNormalizeSql]]) is single-pass-EQUIVALENT,
     * verified byte-equivalent over all UrlSpec fixtures. */
   private def pctNormalize(u: Column): Column =
@@ -400,7 +399,6 @@ object UrlOps {
     * forest runnable for that pin. */
   def canonicalize(docs: DataFrame, id: Column, url: Column,
       keep: Seq[String] = Nil): DataFrame = {
-    graft.functions.UrlExpressions.register(docs.sparkSession)
     val parts =
       graft.functions.UrlExpressions.canonParts(url, TrackingParams)
     docs.select(keep.map(col) ++ Seq(id.as("doc_id"), url.as("url"),
@@ -421,7 +419,6 @@ object UrlOps {
     * three-column equality with the kernel over every fixture URL. */
   def canonicalizeExpr(docs: DataFrame, id: Column, url: Column,
       keep: Seq[String] = Nil): DataFrame = {
-    graft.functions.UrlExpressions.register(docs.sparkSession)
     val q = when(regexp_replace(url, "#.*$", "").contains("?"),
       regexp_replace(regexp_replace(url, "#.*$", ""), "^[^?]*\\?", ""))
       .otherwise(lit(""))

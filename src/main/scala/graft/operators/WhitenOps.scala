@@ -194,7 +194,6 @@ object WhitenOps {
     * unchanged). */
   def whiten(emb: DataFrame, id: Column, vec: Column,
       model: ZcaModel): DataFrame = {
-    graft.functions.AffineExpressions.register(emb.sparkSession)
     emb.select(id.as("vec_id"),
       graft.functions.AffineExpressions.affineProject(
         vec, model.w, model.mean, model.dim, model.dim).as("whitened"))

@@ -285,8 +285,7 @@ object WordPieceOps {
     * rounded 1e-6. */
   def wordPieceFertility(docs: DataFrame, id: Column, text: Column,
       group: Column, vocab: Seq[String]): DataFrame = {
-    val toks = graft.functions.WordPieceExpressions
-      .wordPieceEncode(docs.sparkSession, text, vocab)
+    val toks = graft.functions.WordPieceExpressions.wordPieceEncode(text, vocab)
     val words = filter(split(text, " "), w => length(w) > 0)
     docs
       .select(group.as("grp"),
@@ -343,8 +342,7 @@ object WordPieceOps {
     * frozen-vocabulary form the memoized registry and streams hold). */
   def wordPieceTokenizePieces(docs: DataFrame, id: Column, text: Column,
       vocab: Seq[String]): DataFrame = {
-    val toks = graft.functions.WordPieceExpressions
-      .wordPieceEncode(docs.sparkSession, text, vocab)
+    val toks = graft.functions.WordPieceExpressions.wordPieceEncode(text, vocab)
     docs.select(id.as("doc_id"), toks.as("tokens"),
       size(toks).cast("long").as("n_tokens"),
       size(filter(toks, t => t === Unk)).cast("long").as("n_unk"))

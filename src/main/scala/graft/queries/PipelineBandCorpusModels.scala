@@ -269,7 +269,6 @@ private[queries] object PipelineBandCorpusModels {
   private[queries] val q139 = QueryDef(
     "q139_cc_luhn",
     (s, d) => {
-      graft.functions.HashExpressions.register(s)
       import graft.functions.HashExpressions.polyHash
       val docs = Tables.documents(s, d)
       val h1 = polyHash(col("text"))
@@ -407,7 +406,6 @@ private[queries] object PipelineBandCorpusModels {
   private[queries] val q145 = QueryDef(
     "q145_fuzzy_vocab_pairs",
     (s, d) => {
-      graft.functions.HashExpressions.register(s)
       import graft.functions.HashExpressions.polyHash
       val docs = Tables.documents(s, d)
       val h = polyHash(col("text"))
@@ -451,7 +449,6 @@ private[queries] object PipelineBandCorpusModels {
   private[queries] val q146 = QueryDef(
     "q146_fuzzy_pairs_d2",
     (s, d) => {
-      graft.functions.HashExpressions.register(s)
       import graft.functions.HashExpressions.polyHash
       val docs = Tables.documents(s, d)
       val h = polyHash(col("text"))
@@ -540,7 +537,6 @@ private[queries] object PipelineBandCorpusModels {
   private[queries] val q143 = QueryDef(
     "q143_rendezvous_shards",
     (s, d) => {
-      graft.functions.HashExpressions.register(s)
       Tables.documents(s, d).select(col("doc_id"),
         TextOps.rendezvousShard(col("text"), 8).as("shard8"),
         TextOps.rendezvousShard(col("text"), 9).as("shard9"))
@@ -1085,7 +1081,6 @@ private[queries] object PipelineBandCorpusModels {
   private[queries] val q165 = QueryDef(
     "q165_mojibake_scan",
     (s, d) => {
-      graft.functions.HashExpressions.register(s)
       import graft.functions.HashExpressions.polyHash
       val docs = Tables.documents(s, d)
       val h = polyHash(col("text"))

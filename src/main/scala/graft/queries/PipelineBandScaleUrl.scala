@@ -140,7 +140,6 @@ private[queries] object PipelineBandScaleUrl {
   private[queries] val q174 = QueryDef(
     "q174_script_mix",
     (s, d) => {
-      graft.functions.HashExpressions.register(s)
       val h = graft.functions.HashExpressions.polyHash(col("text"))
       val m = (pmod(h, lit(7L)) + 3L).cast("int")
       val spliced = when(pmod(h, lit(5L)) === 0,
@@ -205,7 +204,6 @@ private[queries] object PipelineBandScaleUrl {
   private[queries] val q181 = QueryDef(
     "q181_url_dedup",
     (s, d) => {
-      graft.functions.HashExpressions.register(s)
       graft.operators.UrlOps.urlDedup(graft.operators.UrlOps.canonicalize(
         Tables.documents(s, d), col("doc_id"), urlCol))
     },
@@ -554,7 +552,6 @@ private[queries] object PipelineBandScaleUrl {
   private[queries] val q177 = QueryDef(
     "q177_domain_token_cap",
     (s, d) => {
-      graft.functions.HashExpressions.register(s)
       // tokens + quality score ride canonicalize's pass-through columns
       // (the q171 no-join-back rule)
       val docs = Tables.documents(s, d)
@@ -740,7 +737,6 @@ private[queries] object PipelineBandScaleUrl {
   private[queries] val q170 = QueryDef(
     "q170_url_canonicalize",
     (s, d) => {
-      graft.functions.HashExpressions.register(s)
       graft.operators.UrlOps.canonicalize(
         Tables.documents(s, d), col("doc_id"), urlCol)
     },
@@ -766,7 +762,6 @@ private[queries] object PipelineBandScaleUrl {
   private[queries] val q171 = QueryDef(
     "q171_domain_stats",
     (s, d) => {
-      graft.functions.HashExpressions.register(s)
       // token counts ride canonicalize's pass-through columns — a
       // join-back to documents on doc_id would shuffle the corpus twice
       // for a value computable in the same row-local pass

@@ -71,7 +71,6 @@ private[queries] object PipelineBandTokenizer {
   private[queries] val q190 = QueryDef(
     "q190_bpe_tokenize",
     (s, d) => {
-      graft.functions.HashExpressions.register(s)
       graft.operators.BpeOps.bpeTokenize(
           Tables.documents(s, d), col("doc_id"), col("text"),
           BpeMergesMemo.merges(s, d))
@@ -129,7 +128,6 @@ private[queries] object PipelineBandTokenizer {
   private[queries] val q196 = QueryDef(
     "q196_bytebpe_tokenize",
     (s, d) => {
-      graft.functions.HashExpressions.register(s)
       graft.operators.BpeOps.byteBpeTokenize(
           Tables.documents(s, d), col("doc_id"), col("text"),
           ByteBpeMergesMemo.merges(s, d))
@@ -220,7 +218,6 @@ private[queries] object PipelineBandTokenizer {
   private[queries] val q199 = QueryDef(
     "q199_gpt_pretokenize",
     (s, d) => {
-      graft.functions.HashExpressions.register(s)
       val pt = graft.operators.BpeOps.gptPreTokenize(col("text"))
       Tables.documents(s, d).select(col("doc_id"),
         size(pt).cast("long").as("n_pretokens"),
@@ -249,7 +246,6 @@ private[queries] object PipelineBandTokenizer {
   private[queries] val q200 = QueryDef(
     "q200_bytebpe_gpt_tokenize",
     (s, d) => {
-      graft.functions.HashExpressions.register(s)
       graft.operators.BpeOps.gptByteBpeTokenize(
           Tables.documents(s, d), col("doc_id"), col("text"),
           GptByteBpeMergesMemo.merges(s, d))
@@ -305,7 +301,6 @@ private[queries] object PipelineBandTokenizer {
   private[queries] val q206 = QueryDef(
     "q206_gpt_special_tokens",
     (s, d) => {
-      graft.functions.HashExpressions.register(s)
       val aug = Tables.documents(s, d).withColumn("text",
         concat(col("text"), lit(GptSpecial), col("lang")))
       graft.operators.BpeOps.gptByteBpeTokenizeSpecial(
@@ -371,7 +366,6 @@ private[queries] object PipelineBandTokenizer {
   private[queries] val q207 = QueryDef(
     "q207_gpt_packed_sequences",
     (s, d) => {
-      graft.functions.HashExpressions.register(s)
       val tok = graft.operators.BpeOps.gptByteBpeTokenize(
         Tables.documents(s, d), col("doc_id"), col("text"),
         GptByteBpeMergesMemo.merges(s, d))
@@ -474,7 +468,6 @@ private[queries] object PipelineBandTokenizer {
   private[queries] val q208 = QueryDef(
     "q208_histogram_pack",
     (s, d) => {
-      graft.functions.HashExpressions.register(s)
       val tok = graft.operators.BpeOps.gptByteBpeTokenize(
         Tables.documents(s, d), col("doc_id"), col("text"),
         GptByteBpeMergesMemo.merges(s, d))
@@ -582,7 +575,6 @@ private[queries] object PipelineBandTokenizer {
   private[queries] val q209 = QueryDef(
     "q209_gpt_token_ids",
     (s, d) => {
-      graft.functions.HashExpressions.register(s)
       graft.operators.BpeOps.gptByteBpeTokenizeIds(
           Tables.documents(s, d), col("doc_id"), col("text"),
           GptByteBpeMergesMemo.merges(s, d))
@@ -633,8 +625,6 @@ private[queries] object PipelineBandTokenizer {
   private[queries] val q210 = QueryDef(
     "q210_gpt_packed_ids",
     (s, d) => {
-      graft.functions.HashExpressions.register(s)
-      graft.functions.BpeExpressions.register(s)
       val tok = graft.operators.BpeOps.gptByteBpeTokenize(
         Tables.documents(s, d), col("doc_id"), col("text"),
         GptByteBpeMergesMemo.merges(s, d))
@@ -1121,7 +1111,6 @@ private[queries] object PipelineBandTokenizer {
   private[queries] val q189 = QueryDef(
     "q189_wordpiece_tokenize",
     (s, d) => {
-      graft.functions.HashExpressions.register(s)
       graft.operators.WordPieceOps.wordPieceTokenizePieces(
           Tables.documents(s, d), col("doc_id"), col("text"),
           WordPieceMemo.vocab(s, d))
@@ -1227,7 +1216,6 @@ private[queries] object PipelineBandTokenizer {
   private[queries] val q192 = QueryDef(
     "q192_iban_scan",
     (s, d) => {
-      graft.functions.HashExpressions.register(s)
       import graft.functions.HashExpressions.polyHash
       val docs = Tables.documents(s, d)
       val h1 = polyHash(col("text"))
@@ -1285,7 +1273,6 @@ private[queries] object PipelineBandTokenizer {
   private[queries] val q193 = QueryDef(
     "q193_logistic_holdout",
     (s, d) => {
-      graft.functions.HashExpressions.register(s)
       val w = TrainLogisticMemo.weights(s, d)
       val held = Tables.documents(s, d).where(pmod(
         graft.functions.HashExpressions.polyHash(col("text")),

@@ -492,7 +492,6 @@ private[graft] object PipelineShared {
   private[graft] def funnelStages(s: org.apache.spark.sql.SparkSession,
       d: String): Seq[(String, org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame)] = {
-    graft.functions.HashExpressions.register(s)
     // r19 measured-and-REVERTED (the r18 SpanDedupOps convention): one
     // fan-out at the funnel's entry was A/B'd at width 32 (~25% SLOWER —
     // the ~69-stage settle chain pays width × stages task schedulings)
@@ -1099,7 +1098,6 @@ private[graft] object PipelineShared {
     def weights(s: org.apache.spark.sql.SparkSession, d: String)
         : Seq[Double] =
       cache.getOrElseUpdate(d, {
-        graft.functions.HashExpressions.register(s)
         val train = Tables.documents(s, d).where(pmod(
           graft.functions.HashExpressions.polyHash(col("text")),
           lit(100)) < 80)

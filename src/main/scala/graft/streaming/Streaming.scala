@@ -365,7 +365,6 @@ object Streaming {
       threshold: Double, timeCol: String = "event_time"): DataFrame = {
     import graft.functions.TextHash.bandBucket
     val hashes = graft.functions.HashExpressions
-    hashes.register(docs.sparkSession)
     val base = graft.operators.DedupOps.minhashSignaturesLocal(
         docs.withWatermark(timeCol, WatermarkDelay),
         col("doc_id"), col("text"), w,
@@ -695,7 +694,6 @@ object Streaming {
       m: Int, sub: Int, refitRatio: Double = 1.5,
       timeCol: String = "event_time"): DataFrame = {
     require(refitRatio > 0, s"refitRatio must be positive, got $refitRatio")
-    graft.functions.VectorExpressions.register(emb.sparkSession)
     val (_, recon) = graft.operators.PQOps.pqEncodeExprs(
       col("embedding"), codebook, m, sub)
     emb.withWatermark(timeCol, WatermarkDelay)
@@ -743,7 +741,6 @@ object Streaming {
       centroids: DataFrame, stats: DataFrame, threshold: Double,
       timeCol: String = "event_time"): DataFrame = {
     import graft.functions.VectorExpressions
-    VectorExpressions.register(deltaEmb.sparkSession)
     val cents = centroids.select(col("vec_id"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq.sortBy(_._1)
     val encoded = deltaEmb.withWatermark(timeCol, WatermarkDelay)
@@ -797,7 +794,6 @@ object Streaming {
       timeCol: String = "event_time"): DataFrame = {
     import graft.functions.VectorExpressions
     import graft.operators.{PQOps, SimilarityOps}
-    VectorExpressions.register(deltaEmb.sparkSession)
     val (codes, _) = PQOps.pqEncodeExprs(col("embedding"), codebook, m, sub)
     val table = typedLit(PQOps.pqCodeDotTable(codebook, m, sub).toSeq)
     val k = codebook.size
@@ -851,7 +847,6 @@ object Streaming {
   def leakageSafeSplitStream(deltaDocs: DataFrame, splitIndex: DataFrame,
       w: Int, trainPct: Int = 80, valPct: Int = 10): DataFrame = {
     import graft.functions.TextHash.bandBucket
-    graft.functions.HashExpressions.register(deltaDocs.sparkSession)
     def side(band: Int) = splitIndex.where(col("band") === lit(band))
       .select(col("b").as(s"_b$band"), col("cluster_id").as(s"_c$band"),
         col("grp_hash").as(s"_h$band"), col("n_members").as(s"_n$band"))
@@ -1035,7 +1030,6 @@ object Streaming {
     * and rows finalize in append mode when the watermark passes. */
   def lineDedupStream(docs: DataFrame, dropLines: DataFrame,
       timeCol: String = "event_time"): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     import graft.functions.HashExpressions.polyHash
     val lines = docs.withWatermark(timeCol, WatermarkDelay)
       .select(col(timeCol).as("_t"), col("doc_id"),
@@ -1064,7 +1058,6 @@ object Streaming {
     * the content-hash bucket makes the decision reproducible across
     * engines, retries, and batch/stream faces for the same document. */
   def corpusMixStream(docs: DataFrame, thresholds: DataFrame): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     docs
       .withColumn("_bkt", graft.functions.TextHash.sampleBucket(
         graft.functions.HashExpressions.polyHash(col("text")), 1000000))
@@ -1227,7 +1220,6 @@ object Streaming {
     * WITHIN one plan (DECISIONS.md), which a micro-batch never does. */
   def decontaminateStream(docs: DataFrame, testH: DataFrame, w: Int,
       minOverlap: Int = 1, timeCol: String = "event_time"): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     val sh = docs.withWatermark(timeCol, WatermarkDelay)
       .select(col(timeCol).as("_t"), col("doc_id"),
         explode(array_distinct(graft.functions.HashExpressions
@@ -1261,7 +1253,6 @@ object Streaming {
       centroids: DataFrame, threshold: Double,
       timeCol: String = "event_time"): DataFrame = {
     import graft.functions.VectorExpressions
-    VectorExpressions.register(deltaEmb.sparkSession)
     val cents = centroids.select(col("vec_id"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq.sortBy(_._1)
     val assigned = deltaEmb.withWatermark(timeCol, WatermarkDelay)
@@ -1306,7 +1297,6 @@ object Streaming {
   def removeRepeatedSpansStream(docs: DataFrame, dupH: DataFrame, w: Int,
       minSpanTokens: Int, timeCol: String = "event_time"): DataFrame = {
     val hashes = graft.functions.HashExpressions
-    hashes.register(docs.sparkSession)
     val pos = docs.withWatermark(timeCol, WatermarkDelay)
       .select(col(timeCol).as("_t"), col("doc_id"), col("text"),
         posexplode(hashes.shingleHashes(col("text"), w)).as(Seq("_p0", "h")))
@@ -1618,7 +1608,6 @@ object Streaming {
     * static-index rule. */
   def crossDocScreenStream(docs: DataFrame, index: DataFrame, k: Int = 3,
       timeCol: String = "event_time"): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     // gram identity is the composite (h, glen) — must match the frozen
     // index's key exactly: the SAME one-pass GramHashLens kernel
     // SpanDedupOps.gramTable scans with (r14 verdict item 8; the r15
@@ -1700,7 +1689,6 @@ object Streaming {
     * to identical hash sets. */
   def winnowScreenStream(docs: DataFrame, fpIndex: DataFrame,
       minShared: Long = 1L, timeCol: String = "event_time"): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     docs.withWatermark(timeCol, WatermarkDelay)
       .select(window(col(timeCol), "1 minute").as("window"), col("doc_id"),
         explode(graft.operators.WinnowOps.fingerprintHashes(col("text")))
@@ -1725,7 +1713,6 @@ object Streaming {
     * index, not the stream). */
   def streamDedupStream(docs: DataFrame,
       timeCol: String = "event_time"): DataFrame = {
-    graft.functions.HashExpressions.register(docs.sparkSession)
     // the dedup key is (polyHash, xxhash64, length): polyHash alone is
     // mod 1e9+7 (~2^30), where birthday collisions — i.e. FALSE DROPS,
     // unauditable in a physically-dropping face — are expected within a

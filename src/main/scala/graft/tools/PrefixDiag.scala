@@ -19,7 +19,6 @@ object PrefixDiag {
     implicit val spark: org.apache.spark.sql.SparkSession =
       GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    HashExpressions.register(spark)
     val w = 2; val t = 0.9
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text")).persist()

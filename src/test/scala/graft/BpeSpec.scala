@@ -428,7 +428,6 @@ class BpeSpec extends SparkSpec {
           w => merges.foldLeft(BpeOps.toByteSymbols(w)) {
             case (s, (l, r)) => BpeOps.mergePair(s, l, r) })))
         .head().getSeq[String](0)
-      BpeExpressions.register(spark)
       val b = df.select(BpeExpressions.byteBpeEncode(col("text"), merges))
         .head().getSeq[String](0)
       assert(a == b, s"byte divergence on '$text': $a vs $b")
@@ -604,7 +603,6 @@ class BpeSpec extends SparkSpec {
     ids.keys.foreach(k =>
       assert(ids(k) == toks(k).map(vocab), s"doc $k id stream"))
     // duplicate vocab entries resolve to the SMALLEST id in the kernel
-    graft.functions.BpeExpressions.register(spark)
     val dup = Seq((1L, Seq("AA"))).toDF("doc_id", "toks")
       .select(graft.functions.BpeExpressions.tokenIds(col("toks"),
         Seq(("AA", 5L), ("AA", 2L))))

@@ -114,7 +114,6 @@ class CorpusStatsSpec extends SparkSpec {
 
   test("deflate_ratio expression: kernel parity, bands, empty -> NULL") {
     import graft.functions.{CompressExpressions, CompressKernel}
-    CompressExpressions.register(spark)
     val texts = Seq(
       "w w w w w w w w w w w w w w w w w w w w w w w w w w w w",  // repetitive
       "the quick brown fox jumps over the lazy dog while it rains",

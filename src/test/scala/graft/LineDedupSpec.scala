@@ -27,7 +27,6 @@ class LineDedupSpec extends SparkSpec {
     (5L, "delta standalone document")).toDF("doc_id", "text")
 
   private def fp(text: String): Long = {
-    graft.functions.HashExpressions.register(spark)
     Seq(text).toDF("t")
       .select(graft.functions.HashExpressions.polyHash(col("t")))
       .as[Long].head()

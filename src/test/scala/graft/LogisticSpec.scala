@@ -136,7 +136,6 @@ class LogisticSpec extends SparkSpec {
 
   test("sf0.001 holdout: a train-split fit generalizes to unseen docs") {
     import graft.functions.HashExpressions
-    HashExpressions.register(spark)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     def feats(df: DataFrame) =
       ClassifyOps.logisticQualityFeatures(TextOps.gopherQuality(

@@ -291,7 +291,6 @@ object MicroBench {
       case "minhash_old" =>
         import graft.functions.{HashExpressions, TextHash}
         val docs = Tables.documents(spark, "/root/testdata/sf0.1")
-        HashExpressions.register(spark)
         val raw = docs.select(col("doc_id"),
             explode(TextHash.wordShingles(col("text"), 2)).as("s"))
           .select(col("doc_id"), HashExpressions.polyHash(col("s")).as("h"))
@@ -417,7 +416,6 @@ object MicroBench {
           col("doc_id"), col("text"), 2, 0.5)
       case "jacc_arr" | "jacc_parity" => {
         import graft.operators.DedupOps
-        graft.functions.HashExpressions.register(spark)
         val docs = Tables.documents(spark, "/root/testdata/sf0.1")
         val cands = DedupOps.lshCandidatePairs(
           DedupOps.minhashSignatures(docs, col("doc_id"), col("text"), 2))
@@ -540,7 +538,6 @@ object MicroBench {
         import org.apache.spark.sql.expressions.Window
         val hashes = graft.functions.HashExpressions
         val docs = Tables.documents(spark, "/root/testdata/sf0.1")
-        hashes.register(spark)
         val (w, minSpanTokens) = (3, 5)
         val posSh = docs.select(col("doc_id"),
             posexplode(hashes.shingleHashes(col("text"), w)).as(Seq("_p0", "h")))
@@ -742,7 +739,6 @@ object MicroBench {
           .collect().map(r => (r.getString(0), r.getDouble(2))).toSeq
         val pieces = head ++ (head.size until n).map(i =>
           (s"§$i¶", -10.0))
-        graft.functions.UnigramExpressions.register(spark)
         docs.select(col("doc_id"),
           size(graft.functions.UnigramExpressions.unigramEncode(
             col("text"), pieces)).cast("long").as("n_pieces"))

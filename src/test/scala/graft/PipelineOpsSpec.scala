@@ -1138,7 +1138,6 @@ class PipelineOpsSpec extends SparkSpec {
     // keep only docs whose content hash lands below the test bucket — the
     // split is a pure function of the text, so this empties the test side;
     // the NULL bloom aggregate must short-circuit, not null-propagate
-    graft.functions.HashExpressions.register(spark)
     val noTest = contamCorpus.where(pmod(
       graft.functions.HashExpressions.polyHash(col("text")), lit(100)) < 90)
     assert(noTest.count() > 0)
@@ -1990,7 +1989,6 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("rendezvousShard: movers land ONLY on the new shard; routing spreads") {
-    graft.functions.HashExpressions.register(spark)
     val corpus = Tables.documents(spark, sf)
     val routed = corpus.select(col("doc_id"),
         TextOps.rendezvousShard(col("text"), 8).as("s8"),
@@ -2130,7 +2128,6 @@ class PipelineOpsSpec extends SparkSpec {
     }
     // the report's test ids and offender ids live in disjoint splits
     val hashes = graft.functions.HashExpressions
-    hashes.register(spark)
     val split = corpus.select(col("doc_id"),
       pmod(hashes.polyHash(col("text")), lit(100)).as("b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -191,7 +191,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("native shingle_hashes equals the composable slice+concat+poly_hash form") {
-    graft.functions.HashExpressions.register(spark)
     // adversarial fixed cases: multi/leading/trailing spaces (empty words),
     // unicode incl. astral plane, single word, empty string, w > n_words
     val fixed = Seq("a b c d", "a  b", " a b ", "solo", "", "ü ñ 日本 语",
@@ -217,7 +216,6 @@ class PropertySpec extends SparkSpec {
 
   test("shingleHashesRaw: a chunked giant document's shingle multiset " +
       "equals the unchunked formula (r18 ADVICE parity pin)") {
-    graft.functions.HashExpressions.register(spark)
     val w = 3
     // > ShingleChunk + w - 1 words so the chunk branch fires (two
     // chunks); a short row rides the no-chunk branch in the same frame
@@ -254,7 +252,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("sorted_intersect_count equals size(array_intersect) on sorted distinct arrays") {
-    graft.functions.HashExpressions.register(spark)
     val arrGen = Gen.chooseNum(0, 40)
       .flatMap(n => Gen.listOfN(n, Gen.chooseNum(-50L, 50L)))
       .map(_.distinct.sorted)
@@ -272,7 +269,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("coordinated_sketch_stats equals the array-algebra formulation") {
-    graft.functions.HashExpressions.register(spark)
     val arrGen = Gen.chooseNum(0, 30)
       .flatMap(n => Gen.listOfN(n, Gen.chooseNum(-40L, 40L)))
       .map(_.distinct.sorted)

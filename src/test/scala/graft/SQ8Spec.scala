@@ -51,7 +51,6 @@ class SQ8Spec extends SparkSpec {
 
   test("codes pack to one byte each and round-trip losslessly (the sink form)") {
     import graft.functions.VectorExpressions
-    VectorExpressions.register(spark)
     val q = SimilarityOps.sq8Quantize(emb,
       SimilarityOps.sq8Stats(emb, col("embedding"), 64),
       col("vec_id"), col("embedding"))

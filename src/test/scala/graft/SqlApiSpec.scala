@@ -21,8 +21,6 @@ class SqlApiSpec extends SparkSpec {
   }
 
   test("native expressions are callable from SQL after registration") {
-    graft.functions.HashExpressions.register(spark)
-    graft.functions.VectorExpressions.register(spark)
     val h = spark.sql("SELECT poly_hash('hello') AS h").as[Long].head()
     assert(h == 99162322L) // the value pinned against DuckDB's fold
     val d = spark.sql(
@@ -33,7 +31,6 @@ class SqlApiSpec extends SparkSpec {
 
   test("quantization expressions are SQL-callable with guarded literal args") {
     import org.apache.spark.sql.AnalysisException
-    graft.functions.VectorExpressions.register(spark)
     // SQ8: encode a 2-dim vector against mins [0,0], scales [1,0] —
     // dim 2 is constant (scale 0) and must code to 0
     val codes = spark.sql(
@@ -65,7 +62,6 @@ class SqlApiSpec extends SparkSpec {
   }
 
   test("pq_code_dot: SQL-callable, m/k guarded like the other folded args") {
-    graft.functions.VectorExpressions.register(spark)
     // m=1, k=2: table[(a*2+b)*1+0] — codes (0) x (1) gather index 1
     val d = spark.sql(
       "SELECT pq_code_dot(array(10.0D, 20.0D, 30.0D, 40.0D), " +
@@ -79,7 +75,6 @@ class SqlApiSpec extends SparkSpec {
   }
 
   test("shingle_hashes width argument: clean analysis errors, not plan-time NPEs") {
-    graft.functions.HashExpressions.register(spark)
     // sane call still works through SQL
     val ok = spark.sql("SELECT shingle_hashes('a b c', 2) AS hs")
       .select(size(col("hs"))).as[Int].head()
@@ -97,7 +92,6 @@ class SqlApiSpec extends SparkSpec {
   }
 
   test("coordinated_sketch_stats: SQL-callable, k guarded like shingle_hashes") {
-    graft.functions.HashExpressions.register(spark)
     val r = spark.sql(
       "SELECT coordinated_sketch_stats(array(1L, 3L, 5L), array(3L, 5L, 9L), 4) AS s")
       .select(col("s.n_sample"), col("s.n_both"), col("s.n_va"), col("s.n_vb"))
@@ -112,7 +106,6 @@ class SqlApiSpec extends SparkSpec {
   }
 
   test("tokenizer kernels are SQL-callable; fused merges arg guarded") {
-    graft.functions.BpeExpressions.register(spark)
     val pts = spark.sql("SELECT gpt_pre_tokenize('it''s 2024!') AS p")
       .as[Seq[String]].head()
     assert(pts == Seq("it", "'s", " 2024", "!"))

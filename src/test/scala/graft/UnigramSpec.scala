@@ -134,7 +134,6 @@ class UnigramSpec extends SparkSpec {
     val pieces = UnigramOps.unigramFit(docs, col("text"),
       vocabSize = 120, seedSize = 240, emIters = 1)
       .as[(String, Long, Double)].collect().map(r => (r._1, r._3)).toSeq
-    UnigramExpressions.register(spark)
     // concat of emitted pieces reconstructs the text minus spaces
     val bad = docs.select(col("doc_id"),
         array_join(UnigramExpressions.unigramEncode(col("text"),

@@ -9,7 +9,6 @@ import graft.operators.UrlOps
 class UrlSpec extends SparkSpec {
   import spark.implicits._
 
-  graft.functions.UrlExpressions.register(spark)
 
   private def canon(url: String): String =
     Seq((1L, url)).toDF("doc_id", "url")

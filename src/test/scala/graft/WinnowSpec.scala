@@ -86,7 +86,6 @@ class WinnowSpec extends SparkSpec {
   }
 
   test("HOF fingerprintHashes equals the window form's hash set per doc") {
-    graft.functions.HashExpressions.register(spark)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val hof = docs.select(col("doc_id"),
       explode(WinnowOps.fingerprintHashes(col("text"), K, W)).as("h"))
