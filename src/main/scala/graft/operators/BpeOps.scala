@@ -329,10 +329,8 @@ object BpeOps {
     * [[bpeTokensExpr]] — fold-by-rank semantics, parity pinned in
     * BpeSpec — at production vocabulary scale (the r11 verdict item 3;
     * MicroBench bpe_apply_* rows measure the chain's blow-up vs this). */
-  def bpeTokensCompiled(spark: org.apache.spark.sql.SparkSession,
-      text: Column, merges: Seq[(String, String)]): Column = {
+  def bpeTokensCompiled(text: Column, merges: Seq[(String, String)]): Column =
     graft.functions.BpeExpressions.bpeEncode(text, merges)
-  }
 
   /** Per-doc tokenization under a learned merge table ([[bpeLearn]]
     * output — collected in rank order; merge tables are vocab-sized by
@@ -342,7 +340,7 @@ object BpeOps {
       merges: DataFrame): DataFrame = {
     val m = merges.orderBy("rank").select("left", "right").collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
-    val toks = bpeTokensCompiled(docs.sparkSession, text, m)
+    val toks = bpeTokensCompiled(text, m)
     docs.select(id.as("doc_id"), toks.as("tokens"),
       size(toks).cast("long").as("n_tokens"))
   }
@@ -367,7 +365,7 @@ object BpeOps {
       group: Column, merges: DataFrame): DataFrame = {
     val m = merges.orderBy("rank").select("left", "right").collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
-    val toks = bpeTokensCompiled(docs.sparkSession, text, m)
+    val toks = bpeTokensCompiled(text, m)
     val words = filter(split(text, " "), w => length(w) > 0)
     docs
       .select(group.as("grp"),

@@ -92,6 +92,11 @@ object Streaming {
     * difference across micro-batches. */
   final case class DiffState(lastMs: Long, lastSpeed: Double, lastAccel: Double)
 
+  /** Built once per JVM: `Encoders.product` derives the encoder by Scala
+    * reflection under a JVM-wide lock, too slow to repeat in every task's
+    * `init`. The encoder itself is immutable, so tasks share it. */
+  private lazy val diffStateEncoder = Encoders.product[DiffState]
+
   /** Keep one close timer per trip, `SessionCloseMs` past its last sample:
     * when the state's `lastMs` moves (or the state is cleared), the timer
     * for the previous bound is deleted before the new one is registered, so
@@ -201,7 +206,7 @@ object Streaming {
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       state = getHandle.getValueState[DiffState](
-        "diff", Encoders.product[DiffState], TTLConfig.NONE)
+        "diff", diffStateEncoder, TTLConfig.NONE)
 
     override def handleInputRows(tripId: Long, it: Iterator[Telemetry],
         timers: TimerValues): Iterator[DiffedSample] = {
@@ -1392,6 +1397,9 @@ object Streaming {
   final case class SessionStatsState(
       startMs: Long, lastMs: Long, n: Long, accs: Seq[ColAcc])
 
+  /** Built once per JVM, as [[diffStateEncoder]]. */
+  private lazy val sessionStatsStateEncoder = Encoders.product[SessionStatsState]
+
   /** The 16 stats columns as typed extractors, ordered EXACTLY as
     * `Algorithms.statsColumns` (asserted in StreamingSpec); GNSS columns are
     * nullable and nulls are skipped, matching pandas describe / Spark aggs. */
@@ -1443,7 +1451,7 @@ object Streaming {
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       state = getHandle.getValueState[SessionStatsState](
-        "sessionStats", Encoders.product[SessionStatsState], TTLConfig.NONE)
+        "sessionStats", sessionStatsStateEncoder, TTLConfig.NONE)
 
     private def freshAccs: Seq[ColAcc] =
       statsExtractors.map(_ => ColAcc(0L, 0.0, 0.0,

@@ -127,7 +127,7 @@ class BpeSpec extends SparkSpec {
     val chain = docs.select(col("doc_id"),
       BpeOps.bpeTokensExpr(col("text"), merges).as("tokens"))
     val compiled = docs.select(col("doc_id"),
-      BpeOps.bpeTokensCompiled(spark, col("text"), merges).as("tokens"))
+      BpeOps.bpeTokensCompiled(col("text"), merges).as("tokens"))
     val diff = chain.withColumnRenamed("tokens", "a")
       .join(compiled.withColumnRenamed("tokens", "b"), "doc_id")
       .where(col("a") =!= col("b")).count()
@@ -141,7 +141,7 @@ class BpeSpec extends SparkSpec {
       val a = df.select(BpeOps.bpeTokensExpr(col("text"), merges))
         .head().getSeq[String](0)
       val b = df.select(
-        BpeOps.bpeTokensCompiled(spark, col("text"), merges))
+        BpeOps.bpeTokensCompiled(col("text"), merges))
         .head().getSeq[String](0)
       assert(a == b, s"divergence on '$text' under $merges: $a vs $b")
     }

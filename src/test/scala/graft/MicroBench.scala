@@ -720,7 +720,7 @@ object MicroBench {
         val docs = Tables.documents(spark, "/root/testdata/sf0.1")
         val toks =
           if (mode == "chain") BpeOps.bpeTokensExpr(col("text"), merges)
-          else BpeOps.bpeTokensCompiled(spark, col("text"), merges)
+          else BpeOps.bpeTokensCompiled(col("text"), merges)
         docs.select(col("doc_id"), toks.as("tokens"),
           size(toks).cast("long").as("n_tokens"))
       // unigram_apply_{N}: Viterbi tokenization of sf0.1 documents under

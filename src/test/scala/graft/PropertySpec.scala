@@ -389,7 +389,7 @@ class PropertySpec extends SparkSpec {
           BpeOps.bpeTokensExpr(col("text"), merges).as("t"))
           .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
         val compiled = df.select(col("doc_id"),
-          BpeOps.bpeTokensCompiled(spark, col("text"), merges).as("t"))
+          BpeOps.bpeTokensCompiled(col("text"), merges).as("t"))
           .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
         assert(compiled == chain,
           s"divergence under merges $merges on $texts")

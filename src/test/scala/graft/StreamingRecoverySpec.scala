@@ -33,7 +33,13 @@ class StreamingRecoverySpec extends SparkSpec {
       status_door_is_open = false, status_grid_is_available = true,
       status_halt_brake_is_active = false, status_park_brake_is_active = false)
 
-  test("diff-stage state survives a stop/restart: accel continuous across the boundary") {
+  /** Runs `fullMetricsStream` over a one-trip speed ramp, stopped and
+    * restarted between its two minutes, and checks that accel stays
+    * continuous across the restart. The first run sees the session confs
+    * `firstRunConf` (restored before the restart); `atRestart` gets the
+    * checkpoint dir while the query is down. Returns the checkpoint dir. */
+  private def diffStageAcrossRestart(firstRunConf: Map[String, String] = Map.empty,
+      atRestart: String => Unit = _ => ()): String = {
     implicit val s = spark
     val base = "2021-03-09 14:15:00"
     val ckpt = Files.createTempDirectory("graft-fm-ckpt").toString
@@ -50,9 +56,14 @@ class StreamingRecoverySpec extends SparkSpec {
     // (accel 0) and minute 2's accel_mean/jerk stats would shift.
     val samples = (0 until 120).map(i =>
       tel(i.toLong, 1L, sec(base, i), speed = i.toDouble))
-    val q1 = start()
-    in.addData(samples.take(60)); q1.processAllAvailable()
-    q1.stop()
+    val saved = firstRunConf.keys.map(k => k -> spark.conf.get(k))
+    firstRunConf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val q1 = start()
+      in.addData(samples.take(60)); q1.processAllAvailable()
+      q1.stop()
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    atRestart(ckpt)
 
     val q2 = start()
     in.addData(samples.drop(60)); q2.processAllAvailable()
@@ -75,6 +86,28 @@ class StreamingRecoverySpec extends SparkSpec {
     // restart -> exactly 1.0; a state loss would give 59/60 here too
     assert(got(1)._2 == 1.0,
       s"accel must be continuous across the restart boundary: ${got(1)}")
+    ckpt
+  }
+
+  test("diff-stage state survives a stop/restart: accel continuous across the boundary") {
+    diffStageAcrossRestart()
+  }
+
+  test("diff-stage state upgrades from snapshot to changelog commits across a restart") {
+    val changelogConf =
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    assert(spark.conf.get(changelogConf) == "true",
+      "GraftSession.builder commits RocksDB state as changelogs")
+    def changelogs(ckpt: String): Long = {
+      val files = Files.walk(java.nio.file.Paths.get(ckpt, "state"))
+      try files.filter(_.getFileName.toString.endsWith(".changelog")).count()
+      finally files.close()
+    }
+    val ckpt = diffStageAcrossRestart(Map(changelogConf -> "false"),
+      atRestart = c => assert(changelogs(c) == 0,
+        "with changelog checkpointing off, every commit is a snapshot"))
+    assert(changelogs(ckpt) > 0,
+      "the restarted query, on the builder's default, commits changelogs")
   }
 
   test("open-run state survives a stop/restart from the checkpoint") {
