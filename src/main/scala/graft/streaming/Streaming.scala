@@ -42,8 +42,15 @@ object Streaming {
       n_samples: Long)
 
   /** Open-run state carried across micro-batches (replaces the reference's
-    * backward paging across minute slices, processor/main.py:250-289). */
-  final case class RunState(startMs: Long, lastMs: Long, n: Long)
+    * backward paging across minute slices, processor/main.py:250-289): the
+    * run bounds, its sample count and, per stats column, `AccSlots`
+    * running doubles (count, Welford mean and M2, min, max): O(1) state
+    * per column, no sample buffering. `accs` packs the doubles as bytes
+    * (empty for [[sessionize]]): `flatMapGroupsWithState` rebuilds the
+    * state decoder in every task, and an array or `Seq` field decodes
+    * through a loop variable with a fresh name, so such a field compiles
+    * a new class in every task of every micro-batch; binary does not. */
+  final case class RunState(startMs: Long, lastMs: Long, n: Long, accs: Array[Byte])
 
   val WatermarkDelay = "400 seconds"
   private val SessionCloseMs = 400000L
@@ -97,10 +104,11 @@ object Streaming {
     * `init`. The encoder itself is immutable, so tasks share it. */
   private lazy val diffStateEncoder = Encoders.product[DiffState]
 
-  /** Keep one close timer per trip, `SessionCloseMs` past its last sample:
-    * when the state's `lastMs` moves (or the state is cleared), the timer
-    * for the previous bound is deleted before the new one is registered, so
-    * superseded timers do not pile up in the state store. */
+  /** The diff stage keeps one close timer per trip, `SessionCloseMs` past
+    * its last sample: when the state's `lastMs` moves (or the state is
+    * cleared), the timer for the previous bound is deleted before the new
+    * one is registered, so superseded timers do not pile up in the state
+    * store. */
   private def moveTimer(handle: StatefulProcessorHandle, prevLastMs: Option[Long],
       lastMs: Option[Long]): Unit =
     if (prevLastMs != lastMs) {
@@ -132,7 +140,9 @@ object Streaming {
     *     `flatMapGroupsWithState` because only it can DECLARE the output
     *     event-time column (`eventTimeColumnName = "time"`) — the watermark
     *     then propagates into stage 2, where fMGWS → aggregation chaining is
-    *     rejected by the global-watermark correctness check.
+    *     rejected by the global-watermark correctness check. Operators
+    *     with no event-time output to declare, the session faces
+    *     included, use `flatMapGroupsWithState` (DECISIONS.md round 24).
     *  2. the tumbling-minute keyed aggregation over the diffed stream, all
     *     eleven metric columns at once. Sums/means use the same exact
     *     decimal arithmetic as batch (bit-identical); the two percentiles
@@ -210,9 +220,7 @@ object Streaming {
 
     override def handleInputRows(tripId: Long, it: Iterator[Telemetry],
         timers: TimerValues): Iterator[DiffedSample] = {
-      // (time, id) — the batch window's exact sort, so duplicate
-      // timestamps tiebreak identically
-      val sorted = it.toIndexedSeq.sortBy(t => (t.time.getTime, t.id))
+      val sorted = it.toIndexedSeq.sorted(byTimeId)
       val prev: Option[DiffState] = if (state.exists()) Some(state.get()) else None
       var last = prev
       val out = sorted.map { t =>
@@ -1388,17 +1396,12 @@ object Streaming {
       trip_id: Long, time_from: Timestamp, time_to: Timestamp,
       n_samples: Long, column: String, stat: String, value: Option[Double])
 
-  /** Single-column running moments (Welford) + extrema — O(1) state per
-    * column per OPEN session, merged sample-by-sample in event-time order. */
-  final case class ColAcc(n: Long, mean: Double, m2: Double, mn: Double, mx: Double)
+  /** Running values per stats column in [[RunState]]`.accs`. */
+  private val AccSlots = 5
 
-  /** Open-session stats state: run bounds + one [[ColAcc]] per stats column
-    * (ordered as [[graft.ztbus.Algorithms.statsColumns]]). */
-  final case class SessionStatsState(
-      startMs: Long, lastMs: Long, n: Long, accs: Seq[ColAcc])
-
-  /** Built once per JVM, as [[diffStateEncoder]]. */
-  private lazy val sessionStatsStateEncoder = Encoders.product[SessionStatsState]
+  /** The doubles packed in [[RunState]]`.accs`, readable and writable. */
+  private def accView(accs: Array[Byte]): java.nio.DoubleBuffer =
+    java.nio.ByteBuffer.wrap(accs).asDoubleBuffer()
 
   /** The 16 stats columns as typed extractors, ordered EXACTLY as
     * `Algorithms.statsColumns` (asserted in StreamingSpec); GNSS columns are
@@ -1415,132 +1418,155 @@ object Streaming {
     t => Some(t.odometry_wheel_speed_ml), t => Some(t.odometry_wheel_speed_mr),
     t => Some(t.odometry_wheel_speed_rl), t => Some(t.odometry_wheel_speed_rr))
 
+  /** Telemetry in `(time, id)` order — the batch window's exact sort, so
+    * duplicate timestamps tiebreak as batch does. */
+  private val byTimeId: Ordering[Telemetry] = (a, b) => {
+    val c = java.lang.Long.compare(a.time.getTime, b.time.getTime)
+    if (c != 0) c else java.lang.Long.compare(a.id, b.id)
+  }
+
+  /** [[FlagSample]] has no id: on equal timestamps flagged samples go
+    * first, so arrival order never decides a run. */
+  private val byTimeFlaggedFirst: Ordering[FlagSample] = (a, b) => {
+    val c = java.lang.Long.compare(a.time.getTime, b.time.getTime)
+    if (c != 0) c else java.lang.Boolean.compare(b.flag, a.flag)
+  }
+
+  /** The flag-run protocol (W4/W6) behind both session faces, written once:
+    * one trip's micro-batch slice as a `flatMapGroupsWithState` function
+    * over [[RunState]], with `EventTimeTimeout`. Samples are taken in
+    * `order`.
+    *  - A flagged sample opens a run, or widens the open one (min start,
+    *    max end: a late in-watermark flagged sample never regresses
+    *    `lastMs`), and folds its `cols` into the run's accumulators
+    *    (in place: the open run owns its array).
+    *  - A false sample at or after `lastMs` closes the run. A late false
+    *    sample inside the open run is ignored and the run stays open:
+    *    batch would split the run there, bounded state cannot
+    *    (DECISIONS.md round 24).
+    *  - The event-time timeout, 400 s past `lastMs`, closes a dangling run.
+    *
+    * `emit` turns a closed run into output rows. The timeout is one value
+    * held in the group state, so no timer is ever superseded. */
+  private def trackRuns[T, O](order: Ordering[T], timeMs: T => Long,
+      flag: T => Boolean, cols: Seq[T => Option[Double]],
+      emit: (Long, RunState) => Iterator[O])(
+      tripId: Long, it: Iterator[T], state: GroupState[RunState]): Iterator[O] = {
+    if (state.hasTimedOut) {
+      val r = state.get
+      state.remove()
+      return emit(tripId, r)
+    }
+    def absorb(accs: Array[Byte], t: T): Array[Byte] = {
+      if (cols.nonEmpty) {
+        val a = accView(accs)
+        var o = 0
+        cols.foreach { f =>
+          f(t) match {
+            case Some(x) =>
+              val n = a.get(o) + 1
+              val d = x - a.get(o + 1)
+              val mean = a.get(o + 1) + d / n
+              a.put(o, n).put(o + 1, mean)
+                .put(o + 2, a.get(o + 2) + d * (x - mean))
+                .put(o + 3, if (n == 1) x else math.min(a.get(o + 3), x))
+                .put(o + 4, if (n == 1) x else math.max(a.get(o + 4), x))
+            case None => ()
+          }
+          o += AccSlots
+        }
+      }
+      accs
+    }
+    // micro-batch iterators are not time-ordered; a trip's in-batch slice
+    // is small (1 Hz), so an in-group sort is safe
+    val out = Seq.newBuilder[O]
+    var open = state.getOption
+    it.toIndexedSeq.sorted(order).foreach { t =>
+      val ms = timeMs(t)
+      if (flag(t)) open = Some(open match {
+        case Some(r) => RunState(math.min(r.startMs, ms),
+          math.max(r.lastMs, ms), r.n + 1, absorb(r.accs, t))
+        case None => RunState(ms, ms, 1L, absorb(
+          new Array[Byte](cols.size * AccSlots * java.lang.Double.BYTES), t))
+      })
+      else open match {
+        case Some(r) if ms >= r.lastMs => out ++= emit(tripId, r); open = None
+        case _ => () // between runs, or late inside the open run
+      }
+    }
+    open match {
+      case Some(r) =>
+        state.update(r)
+        state.setTimeoutTimestamp(r.lastMs + SessionCloseMs)
+      case None => state.remove()
+    }
+    out.result().iterator
+  }
+
+  /** A closed run's long-form stats rows: mean / std / min / max per
+    * column, std rounded to 4 decimals as batch does. */
+  private def statRows(tripId: Long, r: RunState): Iterator[SessionStat] = {
+    val from = new Timestamp(r.startMs)
+    val to = new Timestamp(r.lastMs)
+    val a = accView(r.accs)
+    graft.ztbus.Algorithms.statsColumns.iterator.zipWithIndex.flatMap {
+      case (c, i) =>
+        val o = i * AccSlots
+        val n = a.get(o)
+        def row(stat: String, v: Option[Double]) =
+          SessionStat(tripId, from, to, r.n, c, stat, v)
+        Seq(
+          row("mean", if (n > 0) Some(a.get(o + 1)) else None),
+          row("std", if (n > 1)
+            Some(BigDecimal(math.sqrt(a.get(o + 2) / (n - 1)))
+              .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
+            else None),
+          row("min", if (n > 0) Some(a.get(o + 3)) else None),
+          row("max", if (n > 0) Some(a.get(o + 4)) else None))
+    }
+  }
+
   /** Streaming face of the 32 per-column brake-session stats algorithms
     * (reference other_metrics.py:41-246): per-session describe over all 16
     * columns, computed with O(columns) state per OPEN session (Welford
     * moments — no sample buffering) and emitted the moment the session
-    * closes (flag drops) or the 400 s event-time timer fires. Covers the
+    * closes (flag drops) or the 400 s event-time timeout fires; the run
+    * protocol is [[sessionize]]'s ([[trackRuns]]). Covers the
     * mergeable subset of the batch stats — mean / std / min / max
     * (+ n_samples); the exact interpolated quartiles are batch-only
     * ([[graft.ztbus.Algorithms.brakeSessionStats]]), since exact percentiles
     * need the whole session buffered — the documented bounded-state trade.
     * StreamingSpec asserts equality with the batch stats on the shared
     * columns (exact for min/max/n, 1e-9-relative for mean, 1e-4 for the
-    * 4-decimal-rounded std). */
+    * 4-decimal-rounded std). `flagCol` is the halt or park brake flag;
+    * any other column throws `IllegalArgumentException` here, at the
+    * call. */
   def sessionStatsStream(telemetry: Dataset[Telemetry], flagCol: String)(
       implicit spark: SparkSession): Dataset[SessionStat] = {
     import spark.implicits._
+    val flag: Telemetry => Boolean = flagCol match {
+      case "status_halt_brake_is_active" => _.status_halt_brake_is_active
+      case "status_park_brake_is_active" => _.status_park_brake_is_active
+      case other =>
+        throw new IllegalArgumentException(s"unsupported session flag: $other")
+    }
     telemetry
       .withWatermark("time", WatermarkDelay)
       .groupByKey(_.trip_id)
-      .transformWithState(new SessionStatsProcessor(flagCol),
-        TimeMode.EventTime(), OutputMode.Append())
+      .flatMapGroupsWithState(
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
+        trackRuns[Telemetry, SessionStat](byTimeId, _.time.getTime, flag,
+          statsExtractors, statRows) _)
   }
 
-  /** The per-trip session-stats stage — same open/close/timer protocol as
-    * [[sessionize]], with per-column moment accumulation while open. */
-  class SessionStatsProcessor(flagCol: String)
-      extends StatefulProcessor[Long, Telemetry, SessionStat] {
-    @transient private var state: ValueState[SessionStatsState] = _
-
-    private def flagOf(t: Telemetry): Boolean = flagCol match {
-      case "status_halt_brake_is_active" => t.status_halt_brake_is_active
-      case "status_park_brake_is_active" => t.status_park_brake_is_active
-      case other => sys.error(s"unsupported session flag: $other")
-    }
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[SessionStatsState](
-        "sessionStats", sessionStatsStateEncoder, TTLConfig.NONE)
-
-    private def freshAccs: Seq[ColAcc] =
-      statsExtractors.map(_ => ColAcc(0L, 0.0, 0.0,
-        Double.PositiveInfinity, Double.NegativeInfinity))
-
-    private def absorb(accs: Seq[ColAcc], t: Telemetry): Seq[ColAcc] =
-      accs.lazyZip(statsExtractors).map { (a, f) =>
-        f(t) match {
-          case Some(x) =>
-            val n = a.n + 1
-            val d = x - a.mean
-            val mean = a.mean + d / n
-            ColAcc(n, mean, a.m2 + d * (x - mean),
-              math.min(a.mn, x), math.max(a.mx, x))
-          case None => a
-        }
-      }
-
-    private def emit(tripId: Long, s: SessionStatsState): Iterator[SessionStat] = {
-      val from = new Timestamp(s.startMs)
-      val to = new Timestamp(s.lastMs)
-      graft.ztbus.Algorithms.statsColumns.iterator.zip(s.accs.iterator).flatMap {
-        case (c, a) =>
-          def row(stat: String, v: Option[Double]) =
-            SessionStat(tripId, from, to, s.n, c, stat, v)
-          Seq(
-            row("mean", if (a.n > 0) Some(a.mean) else None),
-            row("std", if (a.n > 1)
-              Some(BigDecimal(math.sqrt(a.m2 / (a.n - 1)))
-                .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
-              else None),
-            row("min", if (a.n > 0) Some(a.mn) else None),
-            row("max", if (a.n > 0) Some(a.mx) else None))
-      }
-    }
-
-    override def handleInputRows(tripId: Long, it: Iterator[Telemetry],
-        timers: TimerValues): Iterator[SessionStat] = {
-      val sorted = it.toIndexedSeq.sortBy(t => (t.time.getTime, t.id))
-      val out = Seq.newBuilder[SessionStat]
-      val prev: Option[SessionStatsState] =
-        if (state.exists()) Some(state.get()) else None
-      var open = prev
-      sorted.foreach { t =>
-        val ms = t.time.getTime
-        (open, flagOf(t)) match {
-          case (Some(s), true) =>
-            // late in-watermark flagged samples are absorbed and the run
-            // bounds widened (never regressed — a shrinking lastMs would
-            // emit time_to < time_from and let a stale timer close the
-            // session early); a retroactive run SPLIT from a late false
-            // sample is unknowable with bounded state and is ignored below
-            open = Some(SessionStatsState(
-              math.min(s.startMs, ms), math.max(s.lastMs, ms), s.n + 1,
-              absorb(s.accs, t)))
-          case (Some(s), false) if ms >= s.lastMs =>
-            out ++= emit(tripId, s)
-            open = None
-          case (Some(_), false) => () // late false inside the open run
-          case (None, true) =>
-            open = Some(SessionStatsState(ms, ms, 1L, absorb(freshAccs, t)))
-          case (None, false) => ()
-        }
-      }
-      open match {
-        case Some(s) => state.update(s)
-        case None => state.clear()
-      }
-      moveTimer(getHandle, prev.map(_.lastMs), open.map(_.lastMs))
-      out.result().iterator
-    }
-
-    override def handleExpiredTimer(tripId: Long, timers: TimerValues,
-        info: ExpiredTimerInfo): Iterator[SessionStat] = {
-      if (state.exists() &&
-          state.get().lastMs + SessionCloseMs <= info.getExpiryTimeInMs) {
-        val s = state.get()
-        state.clear()
-        emit(tripId, s)
-      } else Iterator.empty
-    }
-  }
-
-  /** W4/W6 streaming — flag-delimited sessionization via
-    * flatMapGroupsWithState keyed by trip. A session is a maximal contiguous
-    * run of `flag == true`; it is emitted when a false sample arrives after
-    * an open run, or when the event-time timeout (400 s past the last
-    * sample) fires — so runs straddling micro-batch boundaries survive in
-    * state instead of needing the reference's lookback loop. */
+  /** W4/W6 streaming — flag-delimited sessionization keyed by trip. A
+    * session is a maximal contiguous run of `flag == true`; it is emitted
+    * when a false sample arrives after an open run, or when the event-time
+    * timeout (400 s past the last sample) fires — so runs straddling
+    * micro-batch boundaries survive in state instead of needing the
+    * reference's lookback loop. Late in-watermark data follows
+    * [[trackRuns]]. */
   def sessionize(samples: Dataset[FlagSample])(
       implicit spark: SparkSession): Dataset[SessionOut] = {
     import spark.implicits._
@@ -1548,7 +1574,10 @@ object Streaming {
       .withWatermark("time", WatermarkDelay)
       .groupByKey(_.trip_id)
       .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(processTrip)
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
+        trackRuns[FlagSample, SessionOut](byTimeFlaggedFirst, _.time.getTime,
+          _.flag, Nil, (trip, r) => Iterator.single(SessionOut(trip,
+            new Timestamp(r.startMs), new Timestamp(r.lastMs), r.n))) _)
   }
 
   /** One arriving doc for [[domainTokenCapStream]]. */
@@ -1852,40 +1881,5 @@ object Streaming {
         .partitionBy("batch_id")
         .parquet(outDir)
     }
-  }
-
-  private[streaming] def processTrip(
-      tripId: Long, it: Iterator[FlagSample],
-      state: GroupState[RunState]): Iterator[SessionOut] = {
-    if (state.hasTimedOut) {
-      val out = state.getOption.map(r =>
-        SessionOut(tripId, new Timestamp(r.startMs), new Timestamp(r.lastMs), r.n))
-      state.remove()
-      return out.iterator
-    }
-    // Micro-batch iterators are not time-ordered; 1 Hz per-trip batches are
-    // small, so an in-group sort is safe (bounded by batch slice size).
-    val sorted = it.toIndexedSeq.sortBy(_.time.getTime)
-    val emitted = Seq.newBuilder[SessionOut]
-    var open: Option[RunState] = state.getOption
-    sorted.foreach { s =>
-      val t = s.time.getTime
-      (open, s.flag) match {
-        case (Some(r), true) => open = Some(RunState(r.startMs, t, r.n + 1))
-        case (Some(r), false) =>
-          emitted += SessionOut(tripId, new Timestamp(r.startMs),
-            new Timestamp(r.lastMs), r.n)
-          open = None
-        case (None, true) => open = Some(RunState(t, t, 1))
-        case (None, false) => ()
-      }
-    }
-    open match {
-      case Some(r) =>
-        state.update(r)
-        state.setTimeoutTimestamp(r.lastMs + SessionCloseMs)
-      case None => state.remove()
-    }
-    emitted.result().iterator
   }
 }

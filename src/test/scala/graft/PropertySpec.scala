@@ -490,4 +490,46 @@ class PropertySpec extends SparkSpec {
       assert(out.map(_._5).sum == docs.size.toLong, ctxMsg)
     }
   }
+
+  /** One trip's in-watermark arrival plan: 1 Hz samples `(second, flag,
+    * micro-batch, rank in batch)` with random flags, spread over k = 2–3
+    * micro-batches. False samples are barriers: their batches never
+    * decrease in time order, and a flagged sample's batch lies between its
+    * neighbouring false samples'. So no false sample is late inside an
+    * open run, while the flagged samples of one run arrive in any order. */
+  private val arrivalGen: Gen[Seq[(Int, Boolean, Int, Int)]] = for {
+    n <- Gen.chooseNum(1, 60)
+    k <- Gen.chooseNum(2, 3)
+    flags <- Gen.listOfN(n, Gen.oneOf(true, false))
+    picks <- Gen.listOfN(n, Gen.chooseNum(0, k - 1))
+    ranks <- Gen.listOfN(n, Gen.chooseNum(0, Int.MaxValue))
+  } yield {
+    val batchOf = new Array[Int](n)
+    var last = 0
+    for (i <- 0 until n if !flags(i)) { last = math.max(last, picks(i)); batchOf(i) = last }
+    for (i <- 0 until n if flags(i)) {
+      val lo = (i - 1 to 0 by -1).find(j => !flags(j)).map(batchOf).getOrElse(0)
+      val hi = (i + 1 until n).find(j => !flags(j)).map(batchOf).getOrElse(k - 1)
+      batchOf(i) = lo + picks(i) % (hi - lo + 1)
+    }
+    (0 until n).map(i => (i, flags(i), batchOf(i), ranks(i)))
+  }
+
+  test("both session faces give batch brakeSessions for any in-watermark arrival order") {
+    implicit val s = spark
+    // one trip per generated plan, all trips in the same micro-batches
+    val plans = samples(arrivalGen, 8).zipWithIndex
+    val batches = (0 until 3).map(b => plans.flatMap { case (plan, trip) =>
+      plan.collect { case (sec, flag, `b`, rank) => rank -> ((trip + 1L, sec, flag)) }
+    }.sortBy(_._1).map(_._2))
+    val all = batches.flatten
+    val got = SessionFaces.run(batches)
+    val want = SessionFaces.batch(all)
+    assert(want.nonEmpty)
+    assert(got.sessionize == want, s"sessionize: ${got.sessionize -- want} " +
+      s"extra, ${want -- got.sessionize} missing")
+    assert(got.stats == want, s"sessionStatsStream: ${got.stats -- want} " +
+      s"extra, ${want -- got.stats} missing")
+    SessionFaces.assertStatsOverFlagged(got, all)
+  }
 }

@@ -113,33 +113,43 @@ class StreamingRecoverySpec extends SparkSpec {
   test("open-run state survives a stop/restart from the checkpoint") {
     implicit val s = spark
     val base = "2021-03-09 14:15:00"
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
-    val out = Files.createTempDirectory("graft-sess-out").toString
-    val in = MemoryStream[FlagSample]
+    val inSess = MemoryStream[FlagSample]
+    val inStats = MemoryStream[graft.ztbus.Telemetry]
+    // both session faces, each with its own sink and checkpoint
+    val faces = Seq(
+      (() => Streaming.sessionize(inSess.toDS()).toDF(),
+        (ts: Seq[graft.ztbus.Telemetry]) => inSess.addData(ts.map(t =>
+          FlagSample(t.trip_id, t.time, t.status_halt_brake_is_active)))),
+      (() => Streaming.sessionStatsStream(inStats.toDS(),
+        "status_halt_brake_is_active").toDF(),
+        (ts: Seq[graft.ztbus.Telemetry]) => inStats.addData(ts)))
+    val dirs = faces.map(_ => (Files.createTempDirectory("graft-ckpt").toString,
+      Files.createTempDirectory("graft-sess-out").toString))
+    def feed(ts: Seq[graft.ztbus.Telemetry]): Unit = {
+      val qs = faces.zip(dirs).map { case ((df, _), (ckpt, out)) =>
+        df().writeStream.outputMode("append").format("parquet")
+          .option("path", out).option("checkpointLocation", ckpt).start()
+      }
+      faces.foreach(_._2(ts))
+      qs.foreach(_.processAllAvailable())
+      qs.foreach(_.stop())
+    }
+    def sample(i: Int, flag: Boolean) = tel(i.toLong, 1L, sec(base, i), 1.0)
+      .copy(status_halt_brake_is_active = flag)
 
-    def start() = Streaming.sessionize(in.toDS()).writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", ckpt)
-      .start()
-
-    // batch 1: run open at stop time — state only exists in the checkpoint
-    val q1 = start()
-    in.addData((0 to 9).map(i => FlagSample(1L, sec(base, i), flag = true)))
-    q1.processAllAvailable()
-    q1.stop()
-
+    // run 1: run open at stop time — state only exists in the checkpoint
+    feed((0 to 9).map(sample(_, flag = true)))
     // restart: the closing sample arrives after recovery
-    val q2 = start()
-    in.addData(FlagSample(1L, sec(base, 11), flag = false))
-    q2.processAllAvailable()
-    q2.stop()
+    feed(Seq(sample(11, flag = false)))
 
-    val sessions = spark.read.parquet(out).as[SessionOut].collect()
-    assert(sessions.toSeq == Seq(
-      SessionOut(1L, sec(base, 0), sec(base, 9), 10L)),
-      "one session spanning both runs of the query, emitted exactly once")
+    dirs.map(_._2).foreach { out =>
+      val sessions = spark.read.parquet(out)
+        .select("trip_id", "time_from", "time_to", "n_samples")
+        .as[SessionOut].collect().distinct
+      assert(sessions.toSeq == Seq(
+        SessionOut(1L, sec(base, 0), sec(base, 9), 10L)),
+        s"$out: one session spanning both runs of the query, emitted once")
+    }
   }
 
   test("repeated-span stream merges one window's docs across a restart") {
@@ -408,37 +418,31 @@ class StreamingRecoverySpec extends SparkSpec {
   }
 
   test("stateful ZTBus stages keep one close timer per trip, across a restart") {
+    // the diff stage is the one transformWithState stage; the session
+    // faces hold their timeout inside the group state and have no timers
     implicit val s = spark
     val base = "2021-03-09 14:15:00"
     val in = MemoryStream[graft.ztbus.Telemetry]
-    val faces = Seq(
-      "diff" -> (() => Streaming.fullMetricsStream(in.toDS())),
-      "sessionStats" -> (() => Streaming.sessionStatsStream(in.toDS(),
-        "status_halt_brake_is_active").toDF()))
-    val ckpts = faces.map(_ => Files.createTempDirectory("graft-timer-ckpt").toString)
-    def start() = faces.zip(ckpts).map { case ((_, df), ckpt) =>
-      df().writeStream.outputMode("append").format("noop")
-        .option("checkpointLocation", ckpt).start()
-    }
-    // one trip, three batches of 10 s each with the halt brake held: every
-    // batch moves the trip's last sample, so each moves its close timer
+    val ckpt = Files.createTempDirectory("graft-timer-ckpt").toString
+    def start() = Streaming.fullMetricsStream(in.toDS()).writeStream
+      .outputMode("append").format("noop")
+      .option("checkpointLocation", ckpt).start()
+    // one trip, three batches of 10 s each: every batch moves the trip's
+    // last sample, so each moves its close timer
     val batches = (0 until 30).map(i =>
-      tel(i.toLong, 1L, sec(base, i), speed = 1.0)
-        .copy(status_halt_brake_is_active = true)).grouped(10).toSeq
-    def feed(qs: Seq[org.apache.spark.sql.streaming.StreamingQuery],
-        bs: Seq[Seq[graft.ztbus.Telemetry]]) = {
-      bs.foreach { b => in.addData(b); qs.foreach(_.processAllAvailable()) }
-      val progress = qs.map(_.recentProgress.toSeq)
-      qs.foreach(_.stop())
+      tel(i.toLong, 1L, sec(base, i), speed = 1.0)).grouped(10).toSeq
+    def feed(bs: Seq[Seq[graft.ztbus.Telemetry]]) = {
+      val q = start()
+      bs.foreach { b => in.addData(b); q.processAllAvailable() }
+      val progress = q.recentProgress.toSeq
+      q.stop()
       progress
     }
-    val runs = feed(start(), batches.take(1)).zip(feed(start(), batches.drop(1)))
-    faces.map(_._1).zip(runs).foreach { case (face, (p1, p2)) =>
-      def sum(k: String) = (p1 ++ p2).flatMap(_.stateOperators)
-        .map(o => Option(o.customMetrics.get(k)).map(_.longValue).getOrElse(0L)).sum
-      assert((sum("numRegisteredTimers"), sum("numDeletedTimers"),
-        sum("numExpiredTimers")) == ((3L, 2L, 0L)),
-        s"$face: every move must delete the superseded timer")
-    }
+    val progress = feed(batches.take(1)) ++ feed(batches.drop(1))
+    def sum(k: String) = progress.flatMap(_.stateOperators)
+      .map(o => Option(o.customMetrics.get(k)).map(_.longValue).getOrElse(0L)).sum
+    assert((sum("numRegisteredTimers"), sum("numDeletedTimers"),
+      sum("numExpiredTimers")) == ((3L, 2L, 0L)),
+      "every move must delete the superseded timer")
   }
 }

@@ -1276,38 +1276,52 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("sessionStatsStream: late flagged sample widens the open run, never regresses it") {
-    implicit val s = spark
-    val base = "2021-03-09 14:15:00"
-    val in = MemoryStream[graft.ztbus.Telemetry]
-    val q = Streaming.sessionStatsStream(in.toDS(), "status_halt_brake_is_active")
-      .writeStream.outputMode("append").format("memory").queryName("sstl").start()
-    try {
-      def t(id: Long, secs: Int, speed: Double, flag: Boolean) =
-        graft.ztbus.Fixtures.telemetry().head.copy(
-          id = id, trip_id = 5L, time = sec(base, secs),
-          odometry_vehicle_speed = speed,
-          status_halt_brake_is_active = flag)
+  /** Both session faces on one run protocol (DECISIONS.md round 24): each
+    * case is micro-batches of one trip's `(second, flag)` samples, the
+    * sessions both faces must emit, and whether batch `brakeSessions`
+    * gives the same sessions. */
+  private val sessionCases: Seq[(String, Seq[Seq[(Int, Boolean)]],
+      Seq[(Int, Int, Long)], Boolean)] = {
+    val ties = Seq(0 -> true, 1 -> true, 2 -> true, 2 -> false, 3 -> false,
+      3 -> true, 4 -> false)
+    Seq(
       // batch 1: flagged 0,1,2,4,5 (3 missing); batch 2: late flagged 3,
       // then a closing false at 6
-      in.addData(Seq(0, 1, 2, 4, 5).map(i => t(i.toLong, i, i.toDouble, flag = true)))
-      q.processAllAvailable()
-      in.addData(t(3L, 3, 3.0, flag = true), t(6L, 6, 0.0, flag = false))
-      q.processAllAvailable()
-      val rows = spark.table("sstl")
-        .where(col("column") === "odometry_vehicle_speed")
-        .select("time_from", "time_to", "n_samples", "stat", "value")
-        .as[(Timestamp, Timestamp, Long, String, Option[Double])].collect()
-      assert(rows.nonEmpty, "session must close on the false sample")
-      rows.foreach { r =>
-        assert(r._1 == sec(base, 0) && r._2 == sec(base, 5) && r._3 == 6L,
-          s"late sample must widen, not regress, the run: $r")
-      }
-      val byStat = rows.map(r => r._4 -> r._5).toMap
-      assert(byStat("min").contains(0.0) && byStat("max").contains(5.0))
-      assert(byStat("mean").exists(m => math.abs(m - 2.5) < 1e-12),
-        s"late sample's value must be absorbed: ${byStat("mean")}")
-    } finally q.stop()
+      ("late flagged sample widens the open run, never regresses it",
+        Seq(Seq(0, 1, 2, 4, 5).map(_ -> true), Seq(3 -> true, 6 -> false)),
+        Seq((0, 5, 6L)), true),
+      // batch would split the run at 3; bounded state cannot
+      ("late false sample inside the open run is ignored, the run stays open",
+        Seq(Seq(0, 1, 2, 4, 5).map(_ -> true),
+          Seq(3 -> false, 6 -> true, 7 -> false)),
+        Seq((0, 6, 6L)), false),
+      ("equal timestamps take flagged samples first",
+        Seq(ties), Seq((0, 2, 3L), (3, 3, 1L)), true),
+      ("equal timestamps in reversed arrival order give the same sessions",
+        Seq(ties.reverse), Seq((0, 2, 3L), (3, 3, 1L)), true))
+  }
+
+  sessionCases.foreach { case (name, plan, expect, equalsBatch) =>
+    test(s"both session faces: $name") {
+      implicit val s = spark
+      val batches = plan.map(_.map { case (sec, flag) => (5L, sec, flag) })
+      val want = expect.map { case (a, b, n) =>
+        (5L, SessionFaces.at(a), SessionFaces.at(b), n) }.toSet
+      val got = SessionFaces.run(batches)
+      assert(got.sessionize == want, s"sessionize: ${got.sessionize}")
+      assert(got.stats == want, s"sessionStatsStream: ${got.stats}")
+      SessionFaces.assertStatsOverFlagged(got, batches.flatten)
+      val batch = SessionFaces.batch(batches.flatten)
+      assert((batch == want) == equalsBatch, s"batch brakeSessions: $batch")
+    }
+  }
+
+  test("sessionStatsStream rejects an unsupported flag column at the call") {
+    implicit val s = spark
+    val in = MemoryStream[graft.ztbus.Telemetry]
+    val e = intercept[IllegalArgumentException](
+      Streaming.sessionStatsStream(in.toDS(), "status_door_is_open"))
+    assert(e.getMessage.contains("status_door_is_open"))
   }
 
   test("sessionStatsStream park-brake flag selects the park column") {
