@@ -1438,7 +1438,8 @@ object Streaming {
     * `order`.
     *  - A flagged sample opens a run, or widens the open one (min start,
     *    max end: a late in-watermark flagged sample never regresses
-    *    `lastMs`), and folds its `cols` into the run's accumulators
+    *    `lastMs`; `startMs` may move back across a false sample already
+    *    seen), and folds its `cols` into the run's accumulators
     *    (in place: the open run owns its array).
     *  - A false sample at or after `lastMs` closes the run. A late false
     *    sample inside the open run is ignored and the run stays open:

@@ -496,7 +496,10 @@ class PropertySpec extends SparkSpec {
     * micro-batches. False samples are barriers: their batches never
     * decrease in time order, and a flagged sample's batch lies between its
     * neighbouring false samples'. So no false sample is late inside an
-    * open run, while the flagged samples of one run arrive in any order. */
+    * open run, and no flagged sample arrives in a later micro-batch than a
+    * false sample after it in time (it would widen the open run back
+    * across that sample, DECISIONS.md round 24),
+    * while the flagged samples of one run arrive in any order. */
   private val arrivalGen: Gen[Seq[(Int, Boolean, Int, Int)]] = for {
     n <- Gen.chooseNum(1, 60)
     k <- Gen.chooseNum(2, 3)
@@ -515,7 +518,7 @@ class PropertySpec extends SparkSpec {
     (0 until n).map(i => (i, flags(i), batchOf(i), ranks(i)))
   }
 
-  test("both session faces give batch brakeSessions for any in-watermark arrival order") {
+  test("both session faces give batch brakeSessions when each sample arrives between its neighbouring false samples") {
     implicit val s = spark
     // one trip per generated plan, all trips in the same micro-batches
     val plans = samples(arrivalGen, 8).zipWithIndex

@@ -15,7 +15,8 @@ import graft.ztbus.{Algorithms, Fixtures, Telemetry}
   * the two faces to one run protocol. A sample is `(trip, second, flag)`
   * at `Base + second`; its telemetry row carries speed = second and an id
   * that puts flagged samples first on equal timestamps, the order
-  * `sessionize` uses for `FlagSample`. */
+  * `sessionize` uses for `FlagSample`, or false samples first when
+  * `falseFirst` is set. */
 object SessionFaces {
   type Sample = (Long, Int, Boolean)
   /** One session: (trip, time_from, time_to, n_samples). */
@@ -28,8 +29,8 @@ object SessionFaces {
   private lazy val row0 = Fixtures.telemetry().head
   private val queries = new java.util.concurrent.atomic.AtomicInteger
 
-  def telemetry(s: Sample): Telemetry = row0.copy(
-    id = s._1 * 1000000L + s._2 * 2L + (if (s._3) 0L else 1L),
+  def telemetry(s: Sample, falseFirst: Boolean = false): Telemetry = row0.copy(
+    id = s._1 * 1000000L + s._2 * 2L + (if (s._3 != falseFirst) 0L else 1L),
     trip_id = s._1, time = at(s._2), odometry_vehicle_speed = s._2.toDouble,
     status_halt_brake_is_active = s._3)
 
@@ -43,7 +44,8 @@ object SessionFaces {
   /** Feeds `batches` to both faces, one micro-batch each, then two
     * far-future samples of trip 99 so the event-time timeout closes every
     * dangling run. */
-  def run(batches: Seq[Seq[Sample]])(implicit spark: SparkSession): Emitted = {
+  def run(batches: Seq[Seq[Sample]], falseFirst: Boolean = false)(
+      implicit spark: SparkSession): Emitted = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val id = queries.incrementAndGet()
@@ -59,7 +61,7 @@ object SessionFaces {
       val pushers = Seq(Seq((99L, 7200, false)), Seq((99L, 7201, false)))
       (batches.filter(_.nonEmpty) ++ pushers).foreach { b =>
         inSess.addData(b.map(s => FlagSample(s._1, at(s._2), s._3)))
-        inStats.addData(b.map(telemetry))
+        inStats.addData(b.map(telemetry(_, falseFirst)))
         qs.foreach(_.processAllAvailable())
       }
       val sess = spark.table(s"faces${id}_sess").as[SessionOut].collect()
@@ -79,9 +81,10 @@ object SessionFaces {
   }
 
   /** Batch `brakeSessions` over the same samples. */
-  def batch(samples: Seq[Sample])(implicit spark: SparkSession): Set[Bounds] = {
+  def batch(samples: Seq[Sample], falseFirst: Boolean = false)(
+      implicit spark: SparkSession): Set[Bounds] = {
     import spark.implicits._
-    Algorithms.brakeSessions(samples.map(telemetry).toDF(), Flag)
+    Algorithms.brakeSessions(samples.map(telemetry(_, falseFirst)).toDF(), Flag)
       .select("trip_id", "time_from", "time_to", "n_samples")
       .as[Bounds].collect().toSet
   }

@@ -142,14 +142,17 @@ class StreamingRecoverySpec extends SparkSpec {
     // restart: the closing sample arrives after recovery
     feed(Seq(sample(11, flag = false)))
 
-    dirs.map(_._2).foreach { out =>
-      val sessions = spark.read.parquet(out)
-        .select("trip_id", "time_from", "time_to", "n_samples")
-        .as[SessionOut].collect().distinct
-      assert(sessions.toSeq == Seq(
-        SessionOut(1L, sec(base, 0), sec(base, 9), 10L)),
-        s"$out: one session spanning both runs of the query, emitted once")
-    }
+    // sessionize writes one row per session; sessionStatsStream one per
+    // stats column and stat (mean, std, min, max), each carrying the bounds
+    val once = SessionOut(1L, sec(base, 0), sec(base, 9), 10L)
+    dirs.map(_._2).zip(Seq(1, graft.ztbus.Algorithms.statsColumns.size * 4))
+      .foreach { case (out, rows) =>
+        val sessions = spark.read.parquet(out)
+          .select("trip_id", "time_from", "time_to", "n_samples")
+          .as[SessionOut].collect()
+        assert(sessions.toSeq == Seq.fill(rows)(once),
+          s"$out: one session spanning both runs of the query, emitted once")
+      }
   }
 
   test("repeated-span stream merges one window's docs across a restart") {

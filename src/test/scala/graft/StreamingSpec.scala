@@ -1295,6 +1295,12 @@ class StreamingSpec extends SparkSpec {
         Seq(Seq(0, 1, 2, 4, 5).map(_ -> true),
           Seq(3 -> false, 6 -> true, 7 -> false)),
         Seq((0, 6, 6L)), false),
+      // the false 2 s is already seen when the late flagged 1 s arrives;
+      // batch gives (1 s, 1 s) and (5 s, 5 s), bounded state widens the
+      // open run back across the false sample
+      ("late flagged sample before a false sample already seen joins the open run",
+        Seq(Seq(2 -> false, 5 -> true), Seq(1 -> true, 6 -> false)),
+        Seq((1, 5, 2L)), false),
       ("equal timestamps take flagged samples first",
         Seq(ties), Seq((0, 2, 3L), (3, 3, 1L)), true),
       ("equal timestamps in reversed arrival order give the same sessions",
@@ -1314,6 +1320,23 @@ class StreamingSpec extends SparkSpec {
       val batch = SessionFaces.batch(batches.flatten)
       assert((batch == want) == equalsBatch, s"batch brakeSessions: $batch")
     }
+  }
+
+  test("session faces split differently on a tie whose ids put the false sample first") {
+    implicit val s = spark
+    // flagged and false at 2 s; the telemetry id orders the false one
+    // first, and FlagSample, which has no id, takes the flagged one first
+    val batches = Seq(Seq(0 -> true, 1 -> true, 2 -> true, 2 -> false, 3 -> false)
+      .map { case (sec, flag) => (5L, sec, flag) })
+    def bounds(ss: (Int, Int, Long)*) = ss.map { case (a, b, n) =>
+      (5L, SessionFaces.at(a), SessionFaces.at(b), n) }.toSet
+    val got = SessionFaces.run(batches, falseFirst = true)
+    assert(got.sessionize == bounds((0, 2, 3L)), s"sessionize: ${got.sessionize}")
+    assert(got.stats == bounds((0, 1, 2L), (2, 2, 1L)),
+      s"sessionStatsStream: ${got.stats}")
+    SessionFaces.assertStatsOverFlagged(got, batches.flatten)
+    assert(SessionFaces.batch(batches.flatten, falseFirst = true) == got.stats,
+      "batch brakeSessions sorts by (time, id) as sessionStatsStream does")
   }
 
   test("sessionStatsStream rejects an unsupported flag column at the call") {
