@@ -215,68 +215,4 @@ object CoreOps {
       .agg(base.head, base.tail: _*)
       .drop("_run_id")
   }
-
-  /** [[flagRunAgg]] with bounded parallelism on FEW GIANT KEYS — the session
-    * analog of [[diff2ByJoin]]. The plain formulation sorts each key's whole
-    * history in one task (parallelism = #keys; 3 multi-day trips means 3 of
-    * 32 cores work). This variant splits each key by a coarse `chunk` bucket
-    * (any non-decreasing function of the ordering prefix, e.g.
-    * `floor(unix_timestamp(time) / 3600)`), detects runs WITHIN each
-    * (key, chunk) — parallelism = #keys x #chunks — then stitches runs that
-    * straddle chunk boundaries with a second pass over per-chunk summaries
-    * (#chunks rows per key, negligible) broadcast back as run-id offsets:
-    * chunk k's first run continues chunk k-1's last run iff the flag value
-    * is unchanged across the boundary, so
-    * `offset_k = Σ_{j<k} runs_j − Σ_{j≤k} merge_j` renumbers local runs into
-    * exactly the global gaps-and-islands ids. Output is row-identical to
-    * [[flagRunAgg]] for ANY chunking (PropertySpec). Cost: one extra shuffle
-    * of the fact rows (local window on (key, chunk) + final groupBy on
-    * (key, run) can't share partitioning), AND the window subplan evaluates
-    * twice — once under the offsets aggregation, once under the final join
-    * (the (key, chunk) Exchange is reused; the sort above it is not) —
-    * worth it only when keys are few and huge; measured trade in
-    * DECISIONS.md. */
-  def flagRunAggChunked(df: DataFrame, partCols: Seq[String],
-      orderCols: Seq[Column], flag: Column, chunk: Column, aggs: Seq[Column],
-      runStart: String = "start_ts", runEnd: String = "end_ts",
-      runLen: String = "n_rows"): DataFrame = {
-    val pcols = partCols.map(col)
-    val wLocal = Window.partitionBy(pcols :+ col("_chunk"): _*).orderBy(orderCols: _*)
-    val prev = lag(col("_flag"), 1).over(wLocal)
-    val changed = when(prev.isNull || prev =!= col("_flag"), 1L).otherwise(0L)
-    val local = df
-      .withColumn("_chunk", chunk)
-      .withColumn("_flag", flag)
-      .withColumn("_local_run",
-        sum(changed).over(wLocal.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-
-    val ord = struct(orderCols: _*)
-    val wChunks = Window.partitionBy(pcols: _*).orderBy(col("_chunk"))
-    val merge = when(
-      lag(col("_last_flag"), 1).over(wChunks) === col("_first_flag"), 1L)
-      .otherwise(0L)
-    val offsets = local
-      .groupBy(pcols :+ col("_chunk"): _*)
-      .agg(
-        max(col("_local_run")).as("_runs"),
-        min_by(col("_flag"), ord).as("_first_flag"),
-        max_by(col("_flag"), ord).as("_last_flag"))
-      .withColumn("_offset",
-        coalesce(sum(col("_runs"))
-          .over(wChunks.rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-          - sum(merge).over(wChunks.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .select(pcols :+ col("_chunk") :+ col("_offset"): _*)
-
-    val base = Seq(
-      min(orderCols.head).as(runStart),
-      max(orderCols.head).as(runEnd),
-      count(lit(1)).as(runLen)) ++ aggs
-    local
-      .join(broadcast(offsets), partCols :+ "_chunk")
-      .where(col("_flag"))
-      .withColumn("_run_id", col("_offset") + col("_local_run"))
-      .groupBy(pcols :+ col("_run_id"): _*)
-      .agg(base.head, base.tail: _*)
-      .drop("_run_id")
-  }
 }

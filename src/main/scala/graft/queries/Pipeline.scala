@@ -72,7 +72,9 @@ object MediaNearDup {
     MultimodalOps.videoNearDupPairs(
       MultimodalOps.videoFrameHashes(media).toDF(), maxHamming = 6)
 
-  /** (name, corpus, operator) triples for the bench's fixture loop. */
+  /** (name, corpus, operator) triples: the harness scenario table
+    * (`graft.tools.Harness`) times each operator over its persisted
+    * corpus. */
   def faces: Seq[(String,
       (SparkSession, String) => Dataset[MediaRow],
       Dataset[MediaRow] => SparkSession => DataFrame)] = Seq(

@@ -481,10 +481,10 @@ private[graft] object PipelineShared {
     * `plan` is the stage's DataFrame BEFORE the settle() boundary — the
     * unit of physical planning a staged pipeline actually executes
     * (each stage's own operators over the previous stage's
-    * checkpointed survivors) and what [[graft.PlanDump]] explains per
-    * stage — and `survivors` is the settled frame the next stage
-    * consumes. One builder shared by the q117 registry body and
-    * PlanDump, so the dumped plans cannot drift from the registered
+    * checkpointed survivors) and what `graft.tools.Probe plan` explains
+    * per stage — and `survivors` is the settled frame the next stage
+    * consumes. One builder shared by the q117 registry body and the
+    * probe, so the dumped plans cannot drift from the registered
     * funnel. Building the list EXECUTES the funnel (settle() is an
     * eager localCheckpoint — the stage-boundary materialization is the
     * point: without it each stage re-derives its whole upstream DAG

@@ -296,22 +296,13 @@ object Algorithms {
     * memory per group) — the scale mode for giant sessions, same contract
     * as q24's approx aggregation mode. */
   def brakeSessionStats(telemetry: DataFrame, flagCol: String,
-      approx: Boolean = false, chunkSeconds: Option[Long] = None): DataFrame = {
+      approx: Boolean = false): DataFrame = {
     val aggs = statsColumns.flatMap(describeAggs(_, approx))
-    // chunkSeconds: parallelism escape hatch for few giant trips — split the
-    // per-trip window sort into hour-scale chunks and stitch boundary runs
-    // (CoreOps.flagRunAggChunked); output-identical, measured in DECISIONS.md.
-    val wide = chunkSeconds match {
-      case Some(cs) => CoreOps.flagRunAggChunked(
-        telemetry, Seq("trip_id"), Seq(col("time"), col("id")), col(flagCol),
-        floor(unix_timestamp(col("time")) / cs), aggs,
-        runStart = "time_from", runEnd = "time_to", runLen = "n_samples")
-      case None => CoreOps.flagRunAgg(
-        telemetry, Seq(col("trip_id")), Seq(col("time"), col("id")),
-        col(flagCol), aggs,
-        runStart = "time_from", runEnd = "time_to", runLen = "n_samples",
-        spreadAgg = true)
-    }
+    val wide = CoreOps.flagRunAgg(
+      telemetry, Seq(col("trip_id")), Seq(col("time"), col("id")),
+      col(flagCol), aggs,
+      runStart = "time_from", runEnd = "time_to", runLen = "n_samples",
+      spreadAgg = true)
     val stacked = statsColumns.flatMap(c =>
       DescribeStatNames.map(st =>
         struct(lit(c).as("column"), lit(st).as("stat"),

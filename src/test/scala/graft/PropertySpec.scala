@@ -51,24 +51,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("flagRunAggChunked equals flagRunAgg for any chunking") {
-    // random flags, random aggregate payload, random chunk size — the
-    // boundary-merge renumbering must be output-identical to the
-    // single-partition gaps-and-islands, including runs spanning many chunks
-    val gen = Gen.zip(flagSeqGen, Gen.chooseNum(1, 17))
-    samples(gen, 10).foreach { case (flags, chunkLen) =>
-      val df = flags.zipWithIndex.map { case (f, i) =>
-        ("k", i.toLong, f, (i * 7 % 13).toDouble) }
-        .toDF("k", "t", "flag", "v")
-      val aggs = Seq(sum(col("v")).as("sv"), max(col("v")).as("mv"))
-      val plain = CoreOps.flagRunAgg(df, Seq(col("k")), Seq(col("t")),
-        col("flag"), aggs).collect().toSet
-      val chunked = CoreOps.flagRunAggChunked(df, Seq("k"), Seq(col("t")),
-        col("flag"), floor(col("t") / chunkLen), aggs).collect().toSet
-      assert(chunked == plain, s"chunkLen=$chunkLen flags=$flags")
-    }
-  }
-
   test("Exact.dsum is invariant to partitioning") {
     samples(Gen.listOfN(50, Gen.chooseNum(-1e6, 1e6)), 8).foreach { xs =>
       val df = xs.toDF("v")
