@@ -42,9 +42,9 @@ object GraftSession {
       // default of 100 is below both; 512 leaves about 2x headroom over
       // the larger (DECISIONS.md round 23).
       .config("spark.sql.codegen.cache.maxEntries", "512")
-      // transformWithState (the chained-stateful diff stage in
-      // Streaming.fullMetricsStream) requires the RocksDB provider; it also
-      // keeps streaming state off-heap at scale instead of in executor heap.
+      // RocksDB keeps streaming state off-heap at scale instead of in
+      // executor heap. No stream face needs it; the choice between it and
+      // the in-memory provider has not been measured here.
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       // A commit writes the batch's changes as a changelog file; full

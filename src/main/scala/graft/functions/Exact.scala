@@ -32,6 +32,27 @@ object Exact {
   def dsumIf(cond: Column, c: Column): Column =
     coalesce(sum(when(cond, c).cast(SumDecimal)).cast(DoubleType), lit(0.0))
 
+  /** [[dsum]] over plain doubles, for aggregates computed outside Catalyst:
+    * each addend becomes what `CAST(x AS DECIMAL(28,10))` makes of it (its
+    * `Double.toString` digits, rounded HALF_UP to scale 10), the addends
+    * sum exactly, and the total rounds once to double. NaN and ±Infinity
+    * are skipped, as the cast turns them to NULL; `None` when no addend is
+    * left. An addend with more than 18 integer digits throws, as the ANSI
+    * cast does. */
+  def dsumOf(xs: Iterator[Double]): Option[Double] = {
+    var acc: java.math.BigDecimal = null
+    xs.foreach { x =>
+      if (!x.isNaN && !x.isInfinite) {
+        val d = new java.math.BigDecimal(java.lang.Double.toString(x))
+          .setScale(SumDecimal.scale, java.math.RoundingMode.HALF_UP)
+        if (d.precision - d.scale > SumDecimal.precision - SumDecimal.scale)
+          throw new ArithmeticException(s"$x does not fit $SumDecimal")
+        acc = if (acc == null) d else acc.add(d)
+      }
+    }
+    Option(acc).map(_.doubleValue)
+  }
+
   /** Deterministic mean: exact decimal sum divided (in IEEE double) by the
     * count — one double division, no order dependence. */
   def davg(c: Column): Column = dsum(c) / count(c)

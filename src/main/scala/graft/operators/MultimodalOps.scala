@@ -827,41 +827,6 @@ object MultimodalOps {
       }
       hash
     }
-
-    /** Area-average (box-filter) downscale of a luma plane so the longer
-      * edge is ≤ maxEdge; already-small planes pass through. Returns
-      * (plane, w, h). */
-    def resizeLuma(luma: Array[Byte], w: Int, h: Int,
-        maxEdge: Int): (Array[Byte], Int, Int) = {
-      val scale = maxEdge.toDouble / math.max(w, h)
-      if (scale >= 1.0) (luma, w, h)
-      else {
-        val ow = math.max(1, (w * scale).toInt)
-        val oh = math.max(1, (h * scale).toInt)
-        val out = new Array[Byte](ow * oh)
-        var oy = 0
-        while (oy < oh) {
-          val y0 = oy * h / oh
-          val y1 = math.max(y0 + 1, (oy + 1) * h / oh)
-          var ox = 0
-          while (ox < ow) {
-            val x0 = ox * w / ow
-            val x1 = math.max(x0 + 1, (ox + 1) * w / ow)
-            var s = 0L
-            var y = y0
-            while (y < y1) {
-              var x = x0
-              while (x < x1) { s += luma(y * w + x) & 0xff; x += 1 }
-              y += 1
-            }
-            out(oy * ow + ox) = (s / ((y1 - y0) * (x1 - x0))).toByte
-            ox += 1
-          }
-          oy += 1
-        }
-        (out, ow, oh)
-      }
-    }
   }
 
   /** Real COMPRESSED-video ingest for the MJPEG/DIB-in-AVI container —

@@ -881,11 +881,9 @@ private[graft] object PipelineShared {
       graft.operators.ClassifyOps.distillFeatures(col("text")) :+
         TextOps.funnelPredicates(col("text")).last._2.as("label")))
 
-  /** DuckDB CTE `lbl`: the q60 funnel verdict per doc — the SAME p1–p4
-    * fragments as q60's oracle (unfiltered whitespace split, the shared
-    * [[qualityCompositeSql]]), rebuilt over raw `documents`. */
-  private[queries] def funnelLabelCte: String = funnelLabelCteOver("documents")
-
+  /** DuckDB CTE `lbl` over `table`: the q60 funnel verdict per doc — the
+    * SAME p1–p4 fragments as q60's oracle (unfiltered whitespace split, the
+    * shared [[qualityCompositeSql]]). */
   private[queries] def funnelLabelCteOver(table: String, p: String = ""): String = {
     val allStopSql = TextOps.LangProfiles.flatMap(_._2).distinct
       .map(w => s"'$w'").mkString("[", ", ", "]")

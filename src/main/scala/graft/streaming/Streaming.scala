@@ -1,12 +1,11 @@
 package graft.streaming
 
+import java.nio.ByteBuffer
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, StatefulProcessorHandle,
-  TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.functions.Exact._
 import graft.ztbus.Telemetry
 
@@ -94,167 +93,166 @@ object Streaming {
       .select(col("w.start").as("minute"), col("trip_id"), col("kwh"),
         col("dist_m"), col("dwell_time_s"), col("total_s"), col("kwh_per_km"))
 
-  /** Per-trip carry state for the streaming diff stage: the previous
-    * sample's time/speed/accel, enough to continue the first/second
-    * difference across micro-batches. */
-  final case class DiffState(lastMs: Long, lastSpeed: Double, lastAccel: Double)
+  /** One (minute, trip) row of the five per-minute algorithms: the columns
+    * of [[graft.ztbus.Algorithms.perMinuteMetrics]] before its `trips`
+    * join. */
+  final case class MinuteMetrics(
+      minute: Timestamp, trip_id: Long, temp_50p: Double, kwh: Option[Double],
+      dist_m: Option[Double], passenger_m: Option[Double],
+      kwh_per_km: Option[Double], kwh_per_passenger_km: Option[Double],
+      dwell_time_s: Long, total_s: Long, door_open_fraction: Option[Double],
+      accel_mean: Option[Double], accel_std: Option[Double], jerk_p95: Double,
+      articulation_var: Option[Double], brake_pressure_mean: Double)
 
-  /** Built once per JVM: `Encoders.product` derives the encoder by Scala
-    * reflection under a JVM-wide lock, too slow to repeat in every task's
-    * `init`. The encoder itself is immutable, so tasks share it. */
-  private lazy val diffStateEncoder = Encoders.product[DiffState]
+  /** Per-trip state of [[fullMetricsStream]]: the diff carry (time, speed
+    * and accel of the furthest sample seen) and the samples of the trip's
+    * minutes that the watermark has not yet passed, packed as bytes for
+    * the reason [[RunState]] gives: per sample the time in ms, then
+    * temperature, power, speed, articulation, brake pressure, accel and
+    * jerk as doubles, then passengers and the door flag as ints. */
+  final case class MinuteState(lastMs: Long, lastSpeed: Double,
+      lastAccel: Double, samples: Array[Byte])
 
-  /** The diff stage keeps one close timer per trip, `SessionCloseMs` past
-    * its last sample: when the state's `lastMs` moves (or the state is
-    * cleared), the timer for the previous bound is deleted before the new
-    * one is registered, so superseded timers do not pile up in the state
-    * store. */
-  private def moveTimer(handle: StatefulProcessorHandle, prevLastMs: Option[Long],
-      lastMs: Option[Long]): Unit =
-    if (prevLastMs != lastMs) {
-      prevLastMs.foreach(ms => handle.deleteTimer(ms + SessionCloseMs))
-      lastMs.foreach(ms => handle.registerTimer(ms + SessionCloseMs))
-    }
-
-  /** One telemetry sample augmented with accel/jerk — the streaming
-    * equivalent of the batch per-trip window diffs
-    * (reference processor/main.py:563-565). */
-  final case class DiffedSample(
-      trip_id: Long, time: Timestamp,
-      electric_power_demand: Double, temperature_ambient: Double,
-      traction_brake_pressure: Double, odometry_articulation_angle: Double,
-      odometry_vehicle_speed: Double, itcs_number_of_passengers: Int,
-      status_door_is_open: Boolean, accel: Double, jerk: Double)
+  private val SampleBytes = 8 * 8 + 2 * 4
+  private val MinuteMs = 60000L
 
   /** E3 streaming, FULL five-algorithm metric set — the streaming face of
-    * [[graft.ztbus.Algorithms.perMinuteMetrics]]. Two chained stateful
-    * stages in ONE query:
+    * [[graft.ztbus.Algorithms.perMinuteMetrics]], as ONE stateful operator:
+    * `flatMapGroupsWithState` keyed by trip over [[MinuteState]], the
+    * shape of the session faces (DECISIONS.md round 26).
+    *  - Accel and jerk are per-trip ORDERED first/second differences,
+    *    continued across micro-batches from the carry (a trip's first
+    *    sample fills 0). A trip's slice is sorted by (time, id), the batch
+    *    window's order, so in-batch arrival order never matters. A sample
+    *    older than the carry but inside the watermark is out of order
+    *    ACROSS micro-batches: it gets accel = jerk = 0 (the reset-at-a-gap
+    *    reading of [[graft.operators.CoreOps.diff2ByJoin]]) and still
+    *    reaches every order-free aggregate.
+    *  - A minute's row is emitted in the micro-batch where the watermark
+    *    reaches the minute's end, a windowed aggregation's append rule.
+    *    The event-time timeout fires only once the watermark is past it,
+    *    so it is set to the earliest open minute's end less 1 ms; with no
+    *    minute open it is 400 s past the carry (the W6 bound of the
+    *    session faces) and evicts the state.
+    *  - Each row computes the eleven aggregates as batch defines them:
+    *    decimal sums ([[graft.functions.Exact.dsumOf]]), exact interpolated
+    *    percentiles, count-ifs, sample variances and guarded ratios. Only
+    *    `accel_std`, `articulation_var` and `brake_pressure_mean` depend on
+    *    summation order.
     *
-    *  1. a `transformWithState` diff stage ([[DiffProcessor]]) keyed by trip
-    *     carries the previous (speed, accel) across micro-batches, so
-    *     acceleration and jerk — per-key ORDERED first/second differences —
-    *     survive batch boundaries exactly like the batch window-lag
-    *     formulation (first sample of a trip fills 0; state evicted 400 s
-    *     past the last sample via an event-time timer, the same W6 bound as
-    *     [[sessionize]]). `transformWithState` rather than
-    *     `flatMapGroupsWithState` because only it can DECLARE the output
-    *     event-time column (`eventTimeColumnName = "time"`) — the watermark
-    *     then propagates into stage 2, where fMGWS → aggregation chaining is
-    *     rejected by the global-watermark correctness check. Operators
-    *     with no event-time output to declare, the session faces
-    *     included, use `flatMapGroupsWithState` (DECISIONS.md round 24).
-    *  2. the tumbling-minute keyed aggregation over the diffed stream, all
-    *     eleven metric columns at once. Sums/means use the same exact
-    *     decimal arithmetic as batch (bit-identical); the two percentiles
-    *     use `approx_percentile` (exact interpolated percentiles need the
-    *     whole group buffered — the GK sketch is the documented streaming /
-    *     scale mode, same contract as q24).
-    *
-    * Samples arriving out of order ACROSS micro-batches (older than the
-    * trip's furthest-seen sample, still inside the watermark) are EMITTED
-    * with accel = jerk = 0 — their cross-batch diff is undefined (the same
-    * reset-at-a-gap reading as [[graft.operators.CoreOps.diff2ByJoin]]),
-    * but the row still reaches every order-free aggregate, so kwh / counts
-    * / dwell never silently lose rows. Within a micro-batch the stage
-    * sorts by (time, id) — the batch window's exact order — so any
-    * in-batch arrival order, including duplicate timestamps, matches
-    * batch. `trips` (a static dimension) joins stream-static after the
-    * aggregation for (bus_id, route_id), mirroring the batch plan's
-    * broadcast join. Requires the RocksDB state store provider (set in
-    * [[graft.GraftSession]]). */
+    * `trips` (a static dimension) joins stream-static after the operator
+    * for (bus_id, route_id), mirroring the batch plan's broadcast join. */
   def fullMetricsStream(telemetry: Dataset[Telemetry],
       trips: Option[DataFrame] = None)(
       implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val diffed = telemetry
+    val metrics = telemetry
       .withWatermark("time", WatermarkDelay)
       .groupByKey(_.trip_id)
-      .transformWithState(new DiffProcessor,
-        eventTimeColumnName = "time", outputMode = OutputMode.Append)
-    val agg = diffed
-      .groupBy(window(col("time"), "1 minute").as("w"), col("trip_id"))
-      .agg(
-        percentile_approx(col("temperature_ambient"), lit(0.5), lit(10000))
-          .as("temp_50p"),
-        dsum(col("electric_power_demand") / 3600.0).as("kwh"),
-        dsum(col("odometry_vehicle_speed")).as("dist_m"),
-        dsum(col("itcs_number_of_passengers") * col("odometry_vehicle_speed"))
-          .as("passenger_m"),
-        countIf(col("status_door_is_open") &&
-          col("odometry_vehicle_speed") < 0.1).as("dwell_time_s"),
-        count(lit(1)).as("total_s"),
-        davg(col("accel")).as("accel_mean"),
-        stddev_samp(col("accel")).as("accel_std"),
-        percentile_approx(col("jerk"), lit(0.95), lit(10000)).as("jerk_p95"),
-        var_samp(col("odometry_articulation_angle")).as("articulation_var"),
-        avg(col("traction_brake_pressure")).as("brake_pressure_mean"))
-      .withColumn("kwh_per_km", guardedRatio(col("kwh"), col("dist_m") / 1000.0))
-      .withColumn("kwh_per_passenger_km",
-        guardedRatio(col("kwh"), col("passenger_m") / 1000.0))
-      .withColumn("door_open_fraction",
-        guardedRatio(col("dwell_time_s").cast("double"),
-          col("total_s").cast("double")))
-      .select(col("w.start").as("minute"), col("trip_id"), col("temp_50p"),
-        col("kwh"), col("dist_m"), col("passenger_m"), col("kwh_per_km"),
-        col("kwh_per_passenger_km"), col("dwell_time_s"), col("total_s"),
-        col("door_open_fraction"), col("accel_mean"), col("accel_std"),
-        col("jerk_p95"), col("articulation_var"), col("brake_pressure_mean"))
+      .flatMapGroupsWithState(
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(minuteMetrics _)
+      .toDF()
     trips match {
-      case Some(t) => agg.join(
+      case Some(t) => metrics.join(
         broadcast(t.select(col("id"), col("bus_id"), col("route_id"))),
         col("trip_id") === col("id")).drop("id")
-      case None => agg
+      case None => metrics
     }
   }
 
-  /** The per-trip diff stage as a Spark 4 `StatefulProcessor` — see
-    * [[fullMetricsStream]] for why this is `transformWithState` and not
-    * `flatMapGroupsWithState`. State: one [[DiffState]] per live trip,
-    * cleared by an event-time timer 400 s past the trip's last sample. */
-  class DiffProcessor extends StatefulProcessor[Long, Telemetry, DiffedSample] {
-    @transient private var state: ValueState[DiffState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[DiffState](
-        "diff", diffStateEncoder, TTLConfig.NONE)
-
-    override def handleInputRows(tripId: Long, it: Iterator[Telemetry],
-        timers: TimerValues): Iterator[DiffedSample] = {
-      val sorted = it.toIndexedSeq.sorted(byTimeId)
-      val prev: Option[DiffState] = if (state.exists()) Some(state.get()) else None
-      var last = prev
-      val out = sorted.map { t =>
-        val ms = t.time.getTime
-        val (accel, jerk) =
-          if (last.exists(ms < _.lastMs)) (0.0, 0.0) // late cross-batch: reset
-          else {
-            val a = last.map(t.odometry_vehicle_speed - _.lastSpeed)
-              .getOrElse(0.0)
-            val j = last.map(a - _.lastAccel).getOrElse(0.0)
-            last = Some(DiffState(ms, t.odometry_vehicle_speed, a))
-            (a, j)
-          }
-        DiffedSample(t.trip_id, t.time, t.electric_power_demand,
-          t.temperature_ambient, t.traction_brake_pressure,
-          t.odometry_articulation_angle, t.odometry_vehicle_speed,
-          t.itcs_number_of_passengers, t.status_door_is_open, accel, jerk)
+  /** [[fullMetricsStream]]'s function: diffs and buffers one trip's slice
+    * (empty on a timeout), then emits every minute the watermark has
+    * closed and sets the next timeout. */
+  private def minuteMetrics(tripId: Long, it: Iterator[Telemetry],
+      state: GroupState[MinuteState]): Iterator[MinuteMetrics] = {
+    val arrived = it.toIndexedSeq.sorted(byTimeId)
+    val prev = state.getOption
+    var carry = prev.map(s => (s.lastMs, s.lastSpeed, s.lastAccel))
+    val buf = ByteBuffer.allocate(
+      prev.fold(0)(_.samples.length) + arrived.size * SampleBytes)
+    prev.foreach(s => buf.put(s.samples))
+    arrived.foreach { t =>
+      val ms = t.time.getTime
+      val speed = t.odometry_vehicle_speed
+      val (accel, jerk) = carry match {
+        case Some((lastMs, _, _)) if ms < lastMs => (0.0, 0.0)
+        case c =>
+          val a = c.fold(0.0)(speed - _._2)
+          carry = Some((ms, speed, a))
+          (a, c.fold(0.0)(a - _._3))
       }
-      last.foreach { s =>
-        state.update(s)
-        moveTimer(getHandle, prev.map(_.lastMs), Some(s.lastMs))
-      }
-      out.iterator
+      buf.putLong(ms).putDouble(t.temperature_ambient)
+        .putDouble(t.electric_power_demand).putDouble(speed)
+        .putDouble(t.odometry_articulation_angle)
+        .putDouble(t.traction_brake_pressure).putDouble(accel).putDouble(jerk)
+        .putInt(t.itcs_number_of_passengers)
+        .putInt(if (t.status_door_is_open) 1 else 0)
     }
+    val wm = state.getCurrentWatermarkMs()
+    val (due, open) = (0 until buf.capacity by SampleBytes)
+      .groupBy(o => Math.floorDiv(buf.getLong(o), MinuteMs) * MinuteMs)
+      .toSeq.sortBy(_._1).partition { case (m, _) => m + MinuteMs <= wm }
+    val (lastMs, lastSpeed, lastAccel) = carry.get
+    if (open.nonEmpty) {
+      val kept = ByteBuffer.allocate(open.map(_._2.size).sum * SampleBytes)
+      open.foreach(_._2.foreach(o => kept.put(buf.array, o, SampleBytes)))
+      state.update(MinuteState(lastMs, lastSpeed, lastAccel, kept.array))
+      state.setTimeoutTimestamp(open.head._1 + MinuteMs - 1)
+    } else if (lastMs + SessionCloseMs < wm) state.remove()
+    else {
+      state.update(MinuteState(lastMs, lastSpeed, lastAccel, Array.emptyByteArray))
+      state.setTimeoutTimestamp(lastMs + SessionCloseMs)
+    }
+    due.iterator.map { case (m, offs) => minuteRow(tripId, m, buf, offs) }
+  }
 
-    override def handleExpiredTimer(tripId: Long, timers: TimerValues,
-        info: ExpiredTimerInfo): Iterator[DiffedSample] = {
-      // stale timers (the trip produced newer samples since) must not evict
-      // live state — only the timer matching the current state's bound does
-      if (state.exists() &&
-          state.get().lastMs + SessionCloseMs <= info.getExpiryTimeInMs)
-        state.clear()
-      Iterator.empty
+  /** One minute's row from its samples at offsets `offs` of `recs`, each
+    * aggregate as [[graft.ztbus.Algorithms.perMinuteMetrics]] computes it. */
+  private def minuteRow(tripId: Long, minuteMs: Long, recs: ByteBuffer,
+      offs: IndexedSeq[Int]): MinuteMetrics = {
+    val Seq(temp, power, speed, artic, brake, accel, jerk) =
+      (8 to 56 by 8).map(at => offs.map(o => recs.getDouble(o + at)).toArray)
+    val n = offs.size
+    val kwh = dsumOf(power.iterator.map(_ / 3600.0))
+    val dist = dsumOf(speed.iterator)
+    val passengerM = dsumOf(offs.indices.iterator.map(i => recs.getInt(offs(i) + 64) * speed(i)))
+    val dwell = offs.indices.count(i => recs.getInt(offs(i) + 68) != 0 && speed(i) < 0.1)
+    def perKm(num: Option[Double], m: Option[Double]) =
+      for (x <- num; km <- m.map(_ / 1000.0) if km > 0) yield x / km
+    MinuteMetrics(new Timestamp(minuteMs), tripId,
+      temp_50p = percentileOf(temp, 0.5), kwh = kwh, dist_m = dist,
+      passenger_m = passengerM, kwh_per_km = perKm(kwh, dist),
+      kwh_per_passenger_km = perKm(kwh, passengerM),
+      dwell_time_s = dwell, total_s = n, door_open_fraction = Some(dwell.toDouble / n),
+      accel_mean = dsumOf(accel.iterator).map(_ / n),
+      accel_std = varSamp(accel).map(math.sqrt),
+      jerk_p95 = percentileOf(jerk, 0.95), articulation_var = varSamp(artic),
+      brake_pressure_mean = brake.sum / n)
+  }
+
+  /** Spark's exact `percentile(x, p)` over `v` (sorted in place): the value
+    * at position (n - 1) * p, linearly interpolated between its two
+    * neighbours. */
+  private def percentileOf(v: Array[Double], p: Double): Double = {
+    java.util.Arrays.sort(v)
+    val pos = (v.length - 1) * p
+    val (lo, hi) = (math.floor(pos).toInt, math.ceil(pos).toInt)
+    if (lo == hi || v(lo) == v(hi)) v(lo)
+    else (hi - pos) * v(lo) + (pos - lo) * v(hi)
+  }
+
+  /** `var_samp` as Spark accumulates it, in `xs` order; `None` below two
+    * values. */
+  private def varSamp(xs: Array[Double]): Option[Double] = {
+    var (n, mean, m2) = (0.0, 0.0, 0.0)
+    xs.foreach { x =>
+      n += 1
+      val d = x - mean
+      val dn = d / n
+      mean += dn
+      m2 += d * (d - dn)
     }
+    if (n > 1) Some(m2 / (n - 1)) else None
   }
 
   /** J2 streaming — stream-stream interval join: correlate a stream of

@@ -420,32 +420,36 @@ class StreamingRecoverySpec extends SparkSpec {
     lr.unpersist(blocking = false); docs.unpersist(blocking = false)
   }
 
-  test("stateful ZTBus stages keep one close timer per trip, across a restart") {
-    // the diff stage is the one transformWithState stage; the session
-    // faces hold their timeout inside the group state and have no timers
+  test("metrics face keeps one state row per live trip, across a restart") {
+    // fullMetricsStream's one operator holds a trip's diff carry and its
+    // open minutes in one state row; the row goes once the watermark
+    // passes the trip's last sample + 400 s
     implicit val s = spark
     val base = "2021-03-09 14:15:00"
     val in = MemoryStream[graft.ztbus.Telemetry]
-    val ckpt = Files.createTempDirectory("graft-timer-ckpt").toString
+    val ckpt = Files.createTempDirectory("graft-fm-rows-ckpt").toString
     def start() = Streaming.fullMetricsStream(in.toDS()).writeStream
       .outputMode("append").format("noop")
       .option("checkpointLocation", ckpt).start()
-    // one trip, three batches of 10 s each: every batch moves the trip's
-    // last sample, so each moves its close timer
-    val batches = (0 until 30).map(i =>
-      tel(i.toLong, 1L, sec(base, i), speed = 1.0)).grouped(10).toSeq
+    // two trips, three batches of 10 s each
+    val batches = (0 until 30).flatMap(i => Seq(1L, 2L).map(trip =>
+      tel(i * 10L + trip, trip, sec(base, i), speed = 1.0))).grouped(20).toSeq
     def feed(bs: Seq[Seq[graft.ztbus.Telemetry]]) = {
       val q = start()
       bs.foreach { b => in.addData(b); q.processAllAvailable() }
-      val progress = q.recentProgress.toSeq
+      val rows = q.recentProgress.toSeq.flatMap(_.stateOperators).map(_.numRowsTotal)
       q.stop()
-      progress
+      rows
     }
-    val progress = feed(batches.take(1)) ++ feed(batches.drop(1))
-    def sum(k: String) = progress.flatMap(_.stateOperators)
-      .map(o => Option(o.customMetrics.get(k)).map(_.longValue).getOrElse(0L)).sum
-    assert((sum("numRegisteredTimers"), sum("numDeletedTimers"),
-      sum("numExpiredTimers")) == ((3L, 2L, 0L)),
-      "every move must delete the superseded timer")
+    val live = feed(batches.take(1)) ++ feed(batches.drop(1))
+    assert(live.nonEmpty && live.forall(_ == 2L),
+      s"one state row per live trip, before and after the restart: $live")
+    // the watermark pusher keeps its own open minute: trips 1 and 2,
+    // whose last sample is 400 s behind the watermark, keep 0 rows
+    val after = feed(Seq(Seq(tel(999999L, 99L, sec(base, 7200), 0.0))))
+    val keys = spark.read.format("statestore").load(ckpt)
+      .select("key.value").as[Long].collect().toSeq
+    assert(after.last == 1L && keys == Seq(99L),
+      s"trips past lastMs + 400 s keep no state: rows $after, keys $keys")
   }
 }
